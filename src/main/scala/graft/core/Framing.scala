@@ -40,32 +40,6 @@ object Framing {
   def framesExpr(frameSize: Int, hop: Int, silenceThreshold: Int): Column =
     expr(s"graft_frame_features(tokens, $frameSize, $hop, $silenceThreshold)")
 
-  /** The pure-HOF form of [[framesExpr]] — identical semantics, kept for
-    * A/B benchmarking: Spark's interpreted lambda dispatch makes this
-    * ~50-100× slower on the per-token loop (measured in BENCH notes), which
-    * is why the native expression exists. */
-  def framesExprHof(frameSize: Int, hop: Int, silenceThreshold: Int): Column = expr(
-    s"""transform(
-       |  sequence(0,
-       |    (CASE WHEN n_tok >= $frameSize
-       |          THEN ((n_tok - $frameSize) div $hop) + 1
-       |          ELSE 1 END) - 1),
-       |  f -> aggregate(
-       |    slice(tokens, f * $hop + 1, least($frameSize, n_tok - f * $hop)),
-       |    named_struct('s', CAST(0 AS BIGINT), 'q', CAST(0 AS BIGINT), 'p', 0),
-       |    (acc, x) -> named_struct(
-       |      's', acc.s + x,
-       |      'q', acc.q + CAST(x AS BIGINT) * x,
-       |      'p', greatest(acc.p, abs(x))),
-       |    acc -> named_struct(
-       |      'frame_id', f,
-       |      'n_samp', least($frameSize, n_tok - f * $hop),
-       |      'fsum', acc.s,
-       |      'fsumsq', acc.q,
-       |      'peak', acc.p,
-       |      'rms', sqrt(CAST(acc.q AS DOUBLE) / least($frameSize, n_tok - f * $hop)),
-       |      'is_audible', acc.p > $silenceThreshold)))""".stripMargin)
-
   /** seqs → seqs + `frames` column (spectral clock defaults). */
   def withFrames(seqs: DataFrame,
                  frameSize: Int = Seqs.FrameSize,

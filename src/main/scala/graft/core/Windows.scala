@@ -41,28 +41,6 @@ object Windows {
   def lagSelf(value: Column, key: String, ts: String): Column =
     coalesce(lag(value, 1).over(byKey(key, ts)), value)
 
-  /** Running max of |value| — the prefix-audibility scan used for
-    * leading-silence trim (`SampleAnalyser.cpp:646-676`): a row is "after
-    * first audible" iff the running peak exceeds the floor. */
-  def runningPeak(value: Column, key: String, ts: String): Column =
-    max(abs(value)).over(running(key, ts))
-
-  /** Trailing rolling median over the last `span` rows (inclusive) — onset
-    * threshold baseline (`OnsetDetector.cpp:551-570`). Exact: sorts the
-    * bounded trailing buffer. */
-  def rollingMedian(value: Column, span: Int, key: String, ts: String): Column = {
-    val buf = collect_list(value)
-      .over(byKey(key, ts).rowsBetween(-(span - 1), Window.currentRow))
-    // lower-middle element, matching Stats median semantics
-    element_at(array_sort(buf), ((size(buf) - 1) / 2).cast("int") + 1)
-  }
-
-  /** Rising-edge detector: true where value crosses above threshold
-    * (`OnsetDetector.cpp:573-587`). */
-  def risingEdge(value: Column, threshold: Column, key: String, ts: String): Column =
-    value > threshold && coalesce(lag(value, 1).over(byKey(key, ts)) <= threshold,
-      lit(true))
-
   /** Gap-based sessionization (gaps-and-islands): new session when the gap
     * from the previous event exceeds `gap`. Works on any numeric/timestamp
     * ts (caller passes `ts` already cast to a subtractable type). Returns the
@@ -88,22 +66,4 @@ object Windows {
        |                 'kept', concat(acc.kept, array(CAST(x AS BIGINT)))),
        |    acc),
        |  acc -> acc.kept)""".stripMargin)
-
-  /** One-pole envelope follower (EWMA-style recursion
-    * `state = x + coef * (state - x)`, `Envelopes.inl:14-18`) over an ordered
-    * `array<double>` column; returns the full envelope series (same length).
-    * Sequential fold inside the row — exact, deterministic, shuffle-free. */
-  def envelopeScanExpr(arr: String, coef: Double): Column = expr(
-    s"""aggregate($arr,
-       |  named_struct('s', CAST(0.0 AS DOUBLE),
-       |               'out', CAST(array() AS ARRAY<DOUBLE>)),
-       |  (acc, x) -> named_struct(
-       |    's', x + $coef * (acc.s - x),
-       |    'out', concat(acc.out, array(x + $coef * (acc.s - x)))),
-       |  acc -> acc.out)""".stripMargin)
-
-  /** Final envelope state only (cheaper when the series is not needed). */
-  def envelopeFinalExpr(arr: String, coef: Double): Column = expr(
-    s"aggregate($arr, CAST(0.0 AS DOUBLE), (acc, x) -> x + $coef * (acc - x))"
-  )
 }

@@ -103,24 +103,16 @@ object FeatureVector {
       case s => s"$st.$s"
     }.mkString("array(", ", ", ")")
 
-  /** seqs → (doc_id, fv array<double> of [[Width]]).
-    *
-    * Default = the fused single-pass kernel
-    * ([[graft.functions.fvkernel.FvFullKernel]]); `SPARK_GRAFT_FV_FUSED=0`
-    * selects the composed expression assembly below (kept for A/B — the
-    * FvKernelSpec asserts the two are bitwise identical). */
-  def fvFull(seqs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_FV_FUSED").contains("0")) fvFullComposed(seqs)
-    else fvFullFused(seqs)
-
-  def fvFullFused(seqs: DataFrame): DataFrame = {
+  /** seqs → (doc_id, fv array<double> of [[Width]]) through the fused
+    * single-pass kernel ([[graft.functions.fvkernel.FvFullKernel]]). */
+  def fvFull(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
     seqs.select(col("doc_id"), expr("graft_fv_full(tokens, n_tok)").as("fv"))
   }
 
   /** The composed (one-expression-per-component) assembly — ran the band
-    * battery twice and ~1700 interpreted HOF expressions per row; kept as
-    * the A/B reference for the fused kernel. */
+    * battery twice and ~1700 interpreted HOF expressions per row; the
+    * reference the tests compare [[fvFull]] against. */
   def fvFullComposed(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
     var df = seqs

@@ -3,8 +3,8 @@ package graft.features
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Framing
 import graft.functions.expressions
+import graft.queries.RhythmQueries
 
 /** High-level descriptor stage — the analog of
   * `AnalyzeHighLevelDescriptors` (`SampleAnalyser.cpp:1070-1711`): derived
@@ -82,23 +82,10 @@ object FeaturesHl {
       // percussive onset count on the rhythm clock (RhythmTracker.cpp:99-134
       // rising edges over the trailing-median baseline) — feeds the
       // reference's "< 1 s AND <= 2 onsets" one-shot gate
-      .withColumn("__rser", expr(
-        s"transform(graft_frame_features(tokens, ${graft.sources.Seqs.RFrameSize}, " +
-          s"${graft.sources.Seqs.RHop}, ${graft.sources.Seqs.SilenceThreshold}), fr -> fr.rms)"))
-      .withColumn("__ov", {
-        val w = graft.queries.TokenQueries.MedianSpan - 1
-        expr(
-          s"""transform(sequence(0, size(__rser) - 1), i ->
-             |  greatest(element_at(__rser, i + 1) -
-             |    element_at(sort_array(slice(__rser, greatest(i - $w, 0) + 1,
-             |        i - greatest(i - $w, 0) + 1)),
-             |      CAST((i - greatest(i - $w, 0)) div 2 AS INT) + 1),
-             |    CAST(0.0 AS DOUBLE)) / ${graft.queries.RhythmQueries.OnsetScale})""".stripMargin)
-      })
+      .withColumn("__rser", expr(RhythmQueries.RmsSeriesSql))
+      .withColumn("__ov", expr(RhythmQueries.onsetValuesSql("__rser")))
       .withColumn("n_onsets", expr(
-        """CAST(size(filter(sequence(0, size(__ov) - 1), i ->
-          |  element_at(__ov, i + 1) > 0.1 AND
-          |  (i = 0 OR element_at(__ov, i) <= 0.1))) AS INT)""".stripMargin))
+        "size(graft_rising_edges(__ov, CAST(0.1 AS DOUBLE)))"))
       // ClassificationHeuristics.cpp:12-98 structure: two early-return
       // tiers (< 0.5 s analog -> 0.85; < 1 s analog AND <= 2 percussive
       // onsets -> 0.75), else the cube-compressed continuous length

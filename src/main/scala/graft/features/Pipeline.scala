@@ -3,7 +3,7 @@ package graft.features
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Framing, Windows}
+import graft.core.Framing
 import graft.functions.Stats
 import graft.sources.Seqs
 
@@ -45,12 +45,7 @@ object Pipeline {
     * and the 48-offset point-in-time `feature_vector`. The `tokens` column
     * is carried through untouched (bitwise token-array equality invariant —
     * BASELINE.json:input_hint). */
-  def featuresLl(seqs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_LL_FUSED").contains("0"))
-      featuresLlUnfused(seqs)
-    else featuresLlFused(seqs)
-
-  def featuresLlFused(seqs: DataFrame): DataFrame = {
+  def featuresLl(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
     // ONE fused kernel per row (framing + both series + envelope recursion
     // + both 13-stat blocks + multi-threshold bounds): the token array is
@@ -104,8 +99,8 @@ object Pipeline {
       .drop("__ll")
   }
 
-  /** The pre-fusion chain (one expression per kernel) — kept for A/B
-    * benchmarking of the fused kernel; byte-identical outputs. */
+  /** The pre-fusion chain (one expression per kernel) — the reference the
+    * tests compare [[featuresLl]] against; byte-identical outputs. */
   def featuresLlUnfused(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
     val framed = Framing.withFrames(seqs)

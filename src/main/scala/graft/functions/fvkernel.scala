@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 import graft.features.{FeatureVector => FV, Pipeline, PointInTime}
-import graft.queries.{RhythmQueries, TokenQueries}
+import graft.queries.RhythmQueries
 import graft.sources.Seqs
 
 /** The fused full-classification-feature-vector kernel: the whole 1920-dim
@@ -52,7 +52,6 @@ object fvkernel {
   private val nOff = offs.length
   private val Sixth = 1.0 / 6.0
   private val Thresholds: Array[Int] = Pipeline.EffectiveLengthThresholds.toArray
-  private val MedianSpan = TokenQueries.MedianSpan
 
   /** Spark's `round(x, 6)` for doubles: BigDecimal over the canonical
     * (shortest) decimal string, HALF_UP — see Catalyst `RoundBase`. */
@@ -325,24 +324,16 @@ object fvkernel {
       rser(f) = math.sqrt(q.toDouble / len)
       f += 1
     }
-    // onset series: trailing lower-median subtraction (MedianSpan window)
+    // onset series: rise above the trailing lower median, clipped and scaled
+    val med = rhythm.trailingMedian(rser)
     val ov = new Array[Double](nfr)
     var i = 0
     while (i < nfr) {
-      val g = math.max(i - (MedianSpan - 1), 0)
-      val win = java.util.Arrays.copyOfRange(rser, g, i + 1)
-      java.util.Arrays.sort(win)
-      val med = win((i - g) / 2)
-      ov(i) = math.max(rser(i) - med, 0.0) / RhythmQueries.OnsetScale
+      ov(i) = math.max(rser(i) - med(i), 0.0) / RhythmQueries.OnsetScale
       i += 1
     }
     val rm = rhythm.metricsCore(rhythm.cannyCore(ov))
-    var nOnsets = 0
-    i = 0
-    while (i < nfr) {
-      if (ov(i) > 0.1 && (i == 0 || ov(i - 1) <= 0.1)) nOnsets += 1
-      i += 1
-    }
+    val nOnsets = rhythm.risingEdges(ov, 0.1).length
     val tempoRaw = nOnsets.toDouble * 61440.0 / nTok
     val t0 = if (tempoRaw < 20.0 || tempoRaw > 300.0) 0.0 else tempoRaw
     val t1 = if (t0 > 0.0 && t0 < 80.0) t0 * 2.0 else t0

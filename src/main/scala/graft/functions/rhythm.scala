@@ -2,20 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  ImplicitCastInputTypes, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-/** Rhythm-side kernels: spectral whitening, Canny onset sharpening, and the
-  * peak-picking rhythm metrics.
+/** Rhythm-side kernels: spectral whitening, the onset baseline, Canny onset
+  * sharpening, and the peak-picking rhythm metrics.
   *
   *  - Whitening: per-bin recursive peak-decay normalization — the aubio
   *    `aubio_spectral_whitening_do` recursion
   *    (`3rdParty/Aubio/Dist/src/spectral/awhitening.c:43-51`), applied by
   *    the analyser per hop (`SampleAnalyser.cpp:806-858`). This is the
   *    vector-of-arrays recursive scan (state = one double per bin).
+  *  - Onset baseline: the trailing lower median and the rising-edge test
+  *    (`OnsetDetector.cpp:551-587`) — one implementation each, read by the
+  *    fused feature-vector kernel and every onset/rhythm query.
   *  - Canny window: `i/σ² · exp(−i²/2σ²)` convolution + z-score floor
   *    (`CannyWindow.cpp:10-80`) — sharpens the onset detection series
   *    before peak picking. Summary-path only: MUST NOT feed the
@@ -40,6 +44,10 @@ object rhythm {
 
   /** `aubio_spectral_whitening_default_floor` (`awhitening.c:29`). */
   val WhitenFloor = 1e-4
+
+  /** Trailing-median span in frames, current frame included
+    * (`OnsetDetector.cpp:551-570`). */
+  val MedianSpan = 5
 
   /** Canny window params (`RhythmTracker.cpp:35-36`). */
   val CannyLength = 12
@@ -262,6 +270,80 @@ object rhythm {
 
   // ------------------------------------------------------------------
 
+  /** Trailing lower median (`OnsetDetector.cpp:551-570`): `out(i)` is element
+    * `(len - 1) / 2` of the sorted window `xs[max(0, i - MedianSpan + 1) .. i]`.
+    * `Arrays.sort` orders NaN above every number, as Spark's `array_sort`
+    * and DuckDB's `list_sort` do. */
+  private[graft] def trailingMedian(xs: Array[Double]): Array[Double] = {
+    val n = xs.length
+    val out = new Array[Double](n)
+    val win = new Array[Double](MedianSpan)
+    var i = 0
+    while (i < n) {
+      val g = math.max(i - (MedianSpan - 1), 0)
+      val len = i - g + 1
+      System.arraycopy(xs, g, win, 0, len)
+      java.util.Arrays.sort(win, 0, len)
+      out(i) = win((len - 1) / 2)
+      i += 1
+    }
+    out
+  }
+
+  /** Rising edges (`OnsetDetector.cpp:573-587`): the ascending indices `i`
+    * with `xs(i) > thr` and `i == 0 || xs(i - 1) <= thr`, compared as Spark
+    * SQL compares doubles (NaN above every number). */
+  private[graft] def risingEdges(xs: Array[Double], thr: Double): Array[Int] = {
+    def above(x: Double): Boolean =
+      x > thr || (java.lang.Double.isNaN(x) && !java.lang.Double.isNaN(thr))
+    val out = new Array[Int](xs.length)
+    var n = 0
+    var i = 0
+    while (i < xs.length) {
+      if (above(xs(i)) && (i == 0 || !above(xs(i - 1)))) { out(n) = i; n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  /** graft_trailing_median(xs ARRAY<DOUBLE>) → ARRAY<DOUBLE> — see
+    * [[trailingMedian]]. */
+  case class TrailingMedian(xs: Expression)
+      extends Expression with ImplicitCastInputTypes with CodegenFallback {
+    override def children: Seq[Expression] = Seq(xs)
+    override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    override def nullable: Boolean = xs.nullable
+    override def eval(input: InternalRow): Any = {
+      val aAny = xs.eval(input)
+      if (aAny == null) return null
+      UnsafeArrayData.fromPrimitiveArray(
+        trailingMedian(aAny.asInstanceOf[ArrayData].toDoubleArray()))
+    }
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+      copy(xs = c(0))
+  }
+
+  /** graft_rising_edges(xs ARRAY<DOUBLE>, thr DOUBLE) → ARRAY<INT> of the
+    * indices [[risingEdges]] finds. */
+  case class RisingEdges(xs: Expression, thr: Expression)
+      extends Expression with ImplicitCastInputTypes with CodegenFallback {
+    override def children: Seq[Expression] = Seq(xs, thr)
+    override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), DoubleType)
+    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+    override def nullable: Boolean = xs.nullable || thr.nullable
+    override def eval(input: InternalRow): Any = {
+      val aAny = xs.eval(input); val tAny = thr.eval(input)
+      if (aAny == null || tAny == null) return null
+      UnsafeArrayData.fromPrimitiveArray(risingEdges(
+        aAny.asInstanceOf[ArrayData].toDoubleArray(), tAny.asInstanceOf[Double]))
+    }
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+      copy(xs = c(0), thr = c(1))
+  }
+
+  // ------------------------------------------------------------------
+
   /** graft_canny(xs ARRAY<DOUBLE>) → ARRAY<DOUBLE> — Canny convolution +
     * z-score with a 0 floor (`CannyWindow.cpp:27-71`). */
   case class Canny(xs: Expression) extends Expression with CodegenFallback {
@@ -416,6 +498,10 @@ object rhythm {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("graft_whiten",
       es => Whiten(es(0), es(1), es(2)), "built-in")
+    reg.createOrReplaceTempFunction("graft_trailing_median",
+      es => TrailingMedian(es(0)), "built-in")
+    reg.createOrReplaceTempFunction("graft_rising_edges",
+      es => RisingEdges(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_canny",
       es => Canny(es(0)), "built-in")
     reg.createOrReplaceTempFunction("graft_rhythm_metrics",

@@ -1818,21 +1818,6 @@ object Similarity {
   // grouped sums are exact and the final score is one double division —
   // every stage bitwise across engines and partitionings.
 
-  /** Corpus subvector table: (vec_id, sub, sv DOUBLE[dsub]). */
-  private def pqSubs(embeddings0: DataFrame, m: Int, dsub: Int): DataFrame =
-    embeddings0
-      .select(col("vec_id"),
-        explode(expr(s"sequence(0, ${m - 1})")).as("sub"),
-        col("embedding"))
-      .withColumn("sv", expr(
-        s"transform(slice(embedding, sub * $dsub + 1, $dsub), x -> CAST(x AS DOUBLE))"))
-      .select(col("vec_id"), col("sub"), col("sv"))
-
-  /** Seed codebook: a deterministic stride sample (denser than [[cents]]'
-    * `% 37` — ksub=16 needs ≥ 16 candidates at the 500-vector gate scale)
-    * picks `ksub` seed vectors; code = the seed's rank by vec_id (0-based,
-    * so codes are the dense 0..ksub-1 byte range PQ storage wants), cv =
-    * the seed's subvector. */
   /** Driver-side PQ model train (r6 rewrite): seed = the deterministic
     * `vec_id % 13 = 3` stride sample (collected — ksub rows, model-sized),
     * then `iters` Lloyd rounds, each ONE corpus pass: the fused
@@ -2352,7 +2337,8 @@ object Similarity {
        |    (p, q) -> p + q)""".stripMargin
 
   /** WITH-clause chain (no leading WITH): `subs`, `cb0` … `cb{iters}`,
-    * mirroring [[pqSubs]] + [[pqSeed]] + the [[pqTrainCodebook]] rounds. */
+    * mirroring the subvector split, the seed sample and the Lloyd rounds
+    * of [[pqTrainModel]]. */
   private def duckPqChain(m: Int, dsub: Int, ksub: Int, iters: Int): String = {
     val sb = new StringBuilder
     sb ++= s"""subs AS MATERIALIZED (

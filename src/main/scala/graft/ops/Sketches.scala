@@ -217,40 +217,6 @@ object Sketches {
           .as("est_distinct"))
   }
 
-  /** DuckDB mirror of [[kmvSketch]] — the mirror reduces each source's
-    * DISTINCT hash set directly (exactly what the in-heap dedup computes
-    * from the raw stream); when the distinct set has fewer than k hashes
-    * the estimate falls back to the kept count, which in that regime IS
-    * the distinct count. */
-  def duckKmvSketchSql(seqsSql: String, k: Int): String =
-    s"""WITH seqs AS ($seqsSql),
-       |bi AS MATERIALIZED (
-       |  SELECT DISTINCT source,
-       |    (z[1] + 2048)::BIGINT * 4096 + (z[2] + 2048) AS gram
-       |  FROM (SELECT source, unnest(list_zip(tokens[1:-2], tokens[2:-1])) AS z
-       |        FROM seqs)),
-       |h AS (
-       |  SELECT DISTINCT source,
-       |    ('0x' || substr(md5('kmv:' || source || ':' || gram), 1, 15))::BIGINT
-       |      AS h
-       |  FROM bi),
-       |per_source AS MATERIALIZED (
-       |  SELECT source, (list(h ORDER BY h))[1:$k] AS hs
-       |  FROM h GROUP BY 1),
-       |merged AS (
-       |  SELECT '__all__' AS source,
-       |    (SELECT (list(x ORDER BY x))[1:$k]
-       |     FROM (SELECT unnest(hs) AS x FROM per_source)) AS hs),
-       |sk AS (
-       |  SELECT source, hs[$k] AS kth_min, len(hs) AS n_kept
-       |  FROM (SELECT * FROM per_source UNION ALL SELECT * FROM merged))
-       |SELECT source, kth_min,
-       |  CASE WHEN n_kept < $k OR kth_min IS NULL
-       |    THEN CAST(n_kept AS DOUBLE)
-       |    ELSE CAST(${k - 1} AS DOUBLE) * CAST($KmvRange AS DOUBLE)
-       |         / CAST(kth_min AS DOUBLE) END AS est_distinct
-       |FROM sk""".stripMargin
-
   /** Production KMV: the fused token-array form. One narrow pass —
     * [[graft.functions.expressions.KmvTokensAgg]] packs each bigram,
     * mixes it with a per-SOURCE salt through the Murmur3 64-bit finalizer

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Framing, Windows}
+import graft.core.Framing
 import graft.functions.rhythm
 import graft.sources.Seqs
 
@@ -25,7 +25,27 @@ object RhythmQueries {
   /** Onset-value scale: rhythm post-baseline values mapped to the ~[0,4]
     * range the reference thresholds (0.1, /4 clip) expect. */
   val OnsetScale = 650.0
-  private val MedianSpan = TokenQueries.MedianSpan
+  private val MedianSpan = rhythm.MedianSpan
+
+  /** The rhythm-clock frame RMS series of the `tokens` column, framed in
+    * the row. */
+  private[graft] val RmsSeriesSql: String =
+    s"transform(graft_frame_features(tokens, $RF, $RH, ${Seqs.SilenceThreshold}), fr -> fr.rms)"
+
+  /** Onset values over the RMS-series column `rms`: the rise above its
+    * trailing median ([[rhythm.trailingMedian]]), clipped at 0 and scaled by
+    * [[OnsetScale]]. `rms` must name a column, not an expression. */
+  private[graft] def onsetValuesSql(rms: String): String =
+    s"zip_with($rms, graft_trailing_median($rms), " +
+      s"(r, m) -> greatest(r - m, CAST(0.0 AS DOUBLE)) / $OnsetScale)"
+
+  /** `(doc_id, n_tok, rser)`: each doc's rhythm-clock RMS series. Docs
+    * without tokens have no frames, so they are left out — by a generator,
+    * not a filter: a filter on `tokens` is pushed below the balance
+    * exchange, where it would synthesize every doc's tokens a second time. */
+  private[queries] def rhythmSeries(s: SparkSession, dir: String): DataFrame =
+    seqs(s, dir).select(col("doc_id"), col("n_tok"),
+      explode(expr(s"array_compact(array($RmsSeriesSql))")).as("rser"))
 
   /** Confident-pitch params: token analogs of `IsConfidentPitch`
     * (`SampleAnalyser.cpp:1236-1292`) — the frame "pitch" is its RMS, its
@@ -210,25 +230,17 @@ object RhythmQueries {
           col("w.bin").as("bin"), col("w.white").as("white"))),
 
     // canny-sharpened onset peak metrics (RhythmTracker.cpp:356-480, 623-659)
-    "rhythm_metrics" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), RF, RH)
-      val ov = fr
-        .withColumn("base",
-          Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("v", expr(
-          s"greatest(rms - base, CAST(0.0 AS DOUBLE)) / $OnsetScale"))
-      ov.groupBy(col("doc_id"))
-        .agg(expr("sort_array(collect_list(struct(frame_id, v)))").as("ps"))
-        .withColumn("ser", expr("transform(ps, p -> p.v)"))
-        .withColumn("m", expr("graft_rhythm_metrics(graft_canny(ser))"))
+    "rhythm_metrics" -> ((s, dir) =>
+      rhythmSeries(s, dir)
+        .withColumn("m", expr(
+          s"graft_rhythm_metrics(graft_canny(${onsetValuesSql("rser")}))"))
         .select(col("doc_id"),
           expr("IF(m.strength = 0.0, 0.0, m.strength)").as("strength"),
           col("m.n_peaks").as("n_peaks"),
           expr("IF(m.threshold = 0.0, 0.0, m.threshold)").as("threshold"),
           col("m.n_cpeaks").as("n_cpeaks"),
           expr("IF(round(m.contrast, 6) = 0.0, 0.0, round(m.contrast, 6))")
-            .as("contrast"))
-    }),
+            .as("contrast"))),
 
     // confident-pitch fill with bounded look-ahead seed
     // (SampleAnalyser.cpp:1557-1596): the seed scan over the first
@@ -330,22 +342,12 @@ object RhythmQueries {
     // min(1, 2*strength) when strength > 0.25; combined 0.3/0.7, > 0.7 =
     // Loop. One narrow per-row pipeline, zero shuffle (sqrt is IEEE-exact
     // so no rounding needed; strength/flux proven bitwise elsewhere).
-    "hl_loop" -> ((s, dir) => {
-      val span = MedianSpan
+    "hl_loop" -> ((s, dir) =>
       seqs(s, dir)
-        .withColumn("rfr", Framing.framesExpr(RF, RH, Seqs.SilenceThreshold))
-        .withColumn("rrms", expr("transform(rfr, fr -> fr.rms)"))
-        .withColumn("rv", expr(
-          s"""transform(sequence(0, size(rfr) - 1), i ->
-             |  greatest(element_at(rrms, i + 1) -
-             |    element_at(sort_array(slice(rrms,
-             |        greatest(1, i + 2 - $span), least(i + 1, $span))),
-             |      CAST((least(i + 1, $span) - 1) div 2 AS INT) + 1),
-             |    CAST(0.0 AS DOUBLE)) / $OnsetScale)""".stripMargin))
+        .withColumn("rrms", expr(RmsSeriesSql))
+        .withColumn("rv", expr(onsetValuesSql("rrms")))
         .withColumn("n_onsets", expr(
-          """size(filter(sequence(0, size(rv) - 1), i ->
-            |  element_at(rv, i + 1) > 0.1
-            |  AND (i = 0 OR element_at(rv, i) <= 0.1)))""".stripMargin))
+          "size(graft_rising_edges(rv, CAST(0.1 AS DOUBLE)))"))
         .withColumn("m", expr("graft_rhythm_metrics(graft_canny(rv))"))
         .withColumn("fs", expr(s"graft_frame_spectral(tokens, $F, $H)"))
         .withColumn("flux_mean", expr(
@@ -366,28 +368,18 @@ object RhythmQueries {
           expr("IF(flux_mean = 0.0, 0.0, flux_mean)").as("flux_mean"),
           expr("IF(loop_confidence = 0.0, 0.0, loop_confidence)")
             .as("loop_confidence"),
-          expr("loop_confidence > 0.7").as("is_loop"))
-    }),
+          expr("loop_confidence > 0.7").as("is_loop"))),
 
     // tempo summary: range reject + octave fold into [80, 200) + 3-beat
     // duration gate (RhythmTracker.cpp:203-218, 256-281)
-    "tempo_summary" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), RF, RH)
-      val ov = fr
-        .withColumn("base",
-          Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("v", expr(
-          s"greatest(rms - base, CAST(0.0 AS DOUBLE)) / $OnsetScale"))
-        .withColumn("prev_v", lag(col("v"), 1).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("frame_id"))))
-        .withColumn("is_onset", col("v") > 0.1 &&
-          (col("prev_v").isNull || col("prev_v") <= 0.1))
-      val perDoc = ov.groupBy(col("doc_id")).agg(
-        sum(when(col("is_onset"), 1).otherwise(0)).cast("int").as("n_onsets"),
-        coalesce(max(when(col("v") >= rhythm.PeakThreshold, col("frame_id"))),
-          lit(0)).as("last_active"),
-        any_value(col("n_tok")).as("n_tok"))
-      perDoc
+    "tempo_summary" -> ((s, dir) =>
+      rhythmSeries(s, dir)
+        .withColumn("v", expr(onsetValuesSql("rser")))
+        .withColumn("n_onsets", expr(
+          "size(graft_rising_edges(v, CAST(0.1 AS DOUBLE)))"))
+        .withColumn("last_active", expr(
+          s"""coalesce(array_max(filter(sequence(0, size(v) - 1),
+             |  i -> element_at(v, i + 1) >= CAST(${rhythm.PeakThreshold} AS DOUBLE))), 0)""".stripMargin))
         // onsets per minute on the 1024-token/sec clock
         .withColumn("tempo_raw", expr(
           "CAST(n_onsets AS DOUBLE) * 61440.0 / n_tok"))
@@ -404,8 +396,7 @@ object RhythmQueries {
              |CAST(last_active AS DOUBLE) * $RH >=
              |  (60.0 / tempo * 1024.0) * 3.0""".stripMargin))
         .select(col("doc_id"), col("tempo_raw"), col("tempo"),
-          col("tempo_pretty"), col("is_loop_candidate"))
-    })
+          col("tempo_pretty"), col("is_loop_candidate")))
   )
 
   // ------------------------------------------------------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Framing, Windows}
 import graft.features.{Pipeline, PointInTime}
-import graft.functions.Stats
+import graft.functions.{Stats, rhythm}
 import graft.operators.AsOfJoin
 import graft.sources.Seqs
 
@@ -25,7 +25,7 @@ object TokenQueries {
   /** Onset detection params (rhythm clock): trailing-median span, threshold
     * above baseline, refractory gap, session gap — analogs of
     * `OnsetDetector.cpp:278-290` / `RhythmTracker.cpp:26-40`. */
-  val MedianSpan = 5
+  val MedianSpan = rhythm.MedianSpan
   val OnsetThreshold = 150.0
   val RefractoryGap = 12
   val SessionGap = 32
@@ -120,11 +120,13 @@ object TokenQueries {
     }),
 
     // trailing rolling median (OnsetDetector.cpp:551-570)
-    "rolling_median" -> ((s, dir) => {
-      Framing.frameRows(seqs(s, dir))
-        .withColumn("med", Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .select(col("doc_id"), col("frame_id"), col("rms"), col("med"))
-    }),
+    "rolling_median" -> ((s, dir) =>
+      Framing.withFrames(seqs(s, dir))
+        .withColumn("rms", expr("transform(frames, fr -> fr.rms)"))
+        .withColumn("med", expr("graft_trailing_median(rms)"))
+        .select(col("doc_id"),
+          posexplode(arrays_zip(col("rms"), col("med"))).as(Seq("frame_id", "z")))
+        .select(col("doc_id"), col("frame_id"), col("z.rms"), col("z.med"))),
 
     // forward-fill gated on audibility (SampleAnalyser.cpp:875-917)
     "forward_fill" -> ((s, dir) => {
@@ -197,21 +199,13 @@ object TokenQueries {
 
     // onset pipeline: trailing-median baseline → rising edge → refractory →
     // sessionization (OnsetDetector.cpp:551-587, RhythmTracker.cpp:99-134)
-    "onsets" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), Seqs.RFrameSize, Seqs.RHop)
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_id"))
-      val odf = fr
-        .withColumn("base", Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("post", col("rms") - col("base"))
-        .withColumn("prev_post", lag(col("post"), 1).over(w))
-        .withColumn("is_onset",
-          col("post") > OnsetThreshold &&
-            (col("prev_post").isNull || col("prev_post") <= OnsetThreshold))
-      val perDoc = odf.groupBy(col("doc_id")).agg(
-        sum(when(col("is_onset"), 1).otherwise(0)).cast("int").as("n_raw"),
-        sort_array(collect_list(when(col("is_onset"), col("frame_id"))))
-          .as("onset_frames"))
-      perDoc
+    "onsets" -> ((s, dir) =>
+      RhythmQueries.rhythmSeries(s, dir)
+        .withColumn("onset_frames", expr(
+          s"""graft_rising_edges(
+             |  zip_with(rser, graft_trailing_median(rser), (r, m) -> r - m),
+             |  CAST($OnsetThreshold AS DOUBLE))""".stripMargin))
+        .withColumn("n_raw", size(col("onset_frames")))
         .withColumn("kept", Windows.refractoryExpr("onset_frames", RefractoryGap))
         .withColumn("n_kept", size(col("kept")).cast("int"))
         .withColumn("first_onset",
@@ -224,8 +218,7 @@ object TokenQueries {
              |            (a, b) -> a - b),
              |   d -> d > $SessionGap))) AS INT)""".stripMargin))
         .select(col("doc_id"), col("n_raw"), col("n_kept"),
-          col("first_onset"), col("n_sessions"))
-    }),
+          col("first_onset"), col("n_sessions"))),
 
     // JSON array encode/decode round-trip (SQLite JSON column analog,
     // SqliteSampleDescriptorPool.cpp:316-458 / 151-310)

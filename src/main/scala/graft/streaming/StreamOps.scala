@@ -149,12 +149,12 @@ object StreamOps {
   final case class MedOut(doc_id: String, frame_id: Int, med: Double)
 
   /** Streaming trailing rolling median over the last `span` frames — the
-    * custom-state form of the batch kernel [[graft.core.Windows.rollingMedian]]
-    * (onset threshold baseline, `OnsetDetector.cpp:551-570`). State per key
-    * is the last `span − 1` values (bounded — O(span) per key at any stream
-    * scale) plus the last emitted frame id; each new frame emits the
-    * lower-middle element of the sorted trailing buffer, exactly matching
-    * the batch `rowsBetween(−(span−1), current)` + array_sort semantics.
+    * custom-state form of the batch kernel
+    * [[graft.functions.rhythm.trailingMedian]] (onset threshold baseline,
+    * `OnsetDetector.cpp:551-570`). State per key is the last `span − 1`
+    * values (bounded — O(span) per key at any stream scale) plus the last
+    * emitted frame id; each new frame emits the lower-middle element of the
+    * sorted trailing buffer, exactly as the batch kernel does.
     *
     * Same ordering contract and watermark-timeout state expiry as
     * [[envelopeStream]] (the positional window needs each key's frames

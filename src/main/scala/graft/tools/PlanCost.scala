@@ -21,7 +21,7 @@ object PlanCost {
     for (fused <- Seq(true, false); i <- 1 to 3) {
       val t0 = System.nanoTime()
       val seqs = graft.sources.Seqs.fromDocuments(spark, sfDir)
-      val df = if (fused) graft.features.Pipeline.featuresLlFused(seqs)
+      val df = if (fused) graft.features.Pipeline.featuresLl(seqs)
                else graft.features.Pipeline.featuresLlUnfused(seqs)
       df.queryExecution.executedPlan // force analysis + optimization + planning
       val t1 = System.nanoTime()

@@ -17,7 +17,7 @@ class FvKernelSpec extends AnyFunSuite {
       r.getAs[scala.collection.Seq[Double]]("fv").toSeq).toMap
 
   private def assertIdentical(seqs: org.apache.spark.sql.DataFrame): Unit = {
-    val fused = fvMap(FeatureVector.fvFullFused(seqs))
+    val fused = fvMap(FeatureVector.fvFull(seqs))
     val composed = fvMap(FeatureVector.fvFullComposed(seqs))
     assert(fused.keySet == composed.keySet)
     for (k <- fused.keySet) {

@@ -35,7 +35,7 @@ class PipelineSpec extends AnyFunSuite {
     val seqs = mkSeqs(Seq(
       ("d1", noise, noise.length, "s"),
       ("d2", noise.take(100), 100, "s")))
-    val fused = Pipeline.featuresLlFused(seqs)
+    val fused = Pipeline.featuresLl(seqs)
     val unfused = Pipeline.featuresLlUnfused(seqs)
     assert(fused.schema == unfused.schema,
       s"schema drift: fused=${fused.schema.treeString} unfused=${unfused.schema.treeString}")

@@ -1,0 +1,73 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+  ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
+/** Per-query plan shape, checked on the executed (adaptive) plan. The
+  * onset/rhythm queries compute the trailing median and the rising edges
+  * inside the row ([[graft.functions.rhythm]]), so their plans hold no
+  * window, sort or aggregate. The only exchange allowed is the source's own
+  * balance repartition (`Seqs.fromDocuments`). Their row set stays the one
+  * the exploded frame rows gave: a doc without tokens is absent, a doc with
+  * an empty token array (one NaN-rms frame) is present. */
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  /** A one-file `documents` table of (doc_id, n_chars, source) rows — the
+    * input `Seqs.fromDocuments` synthesizes token arrays from. */
+  private def documents(rows: Seq[(Option[Long], Long, String)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    rows.toDF("doc_id", "n_chars", "source").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private lazy val corpus =
+    documents((1L to 60L).map(i => (Some(i), 1 + i * 37 % 600, s"s${i % 3}")))
+
+  private def executed(q: String): SparkPlan = {
+    val df = SparkEntry.queries(q)(spark, corpus)
+    df.collect() // the adaptive plan is final only after execution
+    df.queryExecution.executedPlan
+  }
+
+  for (q <- Seq("rolling_median", "onsets", "rhythm_metrics", "tempo_summary"))
+    test(s"$q: one in-row pass — no window, sort, aggregate or key shuffle") {
+      val plan = executed(q)
+      val barriers = collect(plan) {
+        case p: WindowExec => p
+        case p: SortExec => p
+        case p: HashAggregateExec => p
+        case p: ObjectHashAggregateExec => p
+        case p: SortAggregateExec => p
+      }
+      assert(barriers.isEmpty, s"\n$plan")
+      val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size <= 1 &&
+        exchanges.forall(_.shuffleOrigin == REPARTITION_BY_NUM), s"\n$plan")
+      // the tokens are synthesized once: no predicate re-evaluates the
+      // token or frame kernels below the balance exchange
+      val tokenGens = collect(plan) { case p => p }
+        .flatMap(_.expressions).map(_.toString)
+        .map("tokengen\\(".r.findAllIn(_).size).sum
+      assert(tokenGens == 1, s"\n$plan")
+    }
+
+  test("in-row onset queries keep the frame-row row set") {
+    // d000001: a normal doc; null doc_id: null tokens; d000003: no tokens
+    val dir = documents(Seq((Some(1L), 100L, "a"), (None, 100L, "b"),
+      (Some(3L), 0L, "c")))
+    for (q <- Seq("rolling_median", "onsets", "rhythm_metrics")) {
+      val ids = SparkEntry.queries(q)(spark, dir)
+        .select("doc_id").as[Option[String]].collect().toSet
+      assert(ids == Set(Some("d000001"), Some("d000003")), q)
+    }
+  }
+}

@@ -108,6 +108,51 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("onset kernels == scalar brute force (trailing median, rising edges)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.rhythm
+    val span = rhythm.MedianSpan
+    // Spark SQL orders doubles totally: NaN above every number
+    val ord = Ordering.Double.TotalOrdering
+    def lit(xs: Array[Double]) = Literal.create(xs.toSeq, ArrayType(DoubleType))
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
+    def median(xs: Array[Double]): Array[Double] =
+      rhythm.TrailingMedian(lit(xs)).eval(null).asInstanceOf[ArrayData].toDoubleArray()
+    def edges(xs: Array[Double], thr: Double): Seq[Int] =
+      rhythm.RisingEdges(lit(xs), Literal(thr)).eval(null)
+        .asInstanceOf[ArrayData].toIntArray().toSeq
+    val rnd = new Random(551)
+    def series(n: Int): Array[Double] = {
+      // a few shared levels give runs of ties; the rest spread over 0..400
+      val levels = Array.fill(1 + rnd.nextInt(4))(rnd.nextDouble() * 400.0)
+      Array.fill(n)(
+        if (rnd.nextInt(3) == 0) levels(rnd.nextInt(levels.length))
+        else rnd.nextDouble() * 400.0)
+    }
+    // the one NaN-rms frame of an empty token array; every length below
+    // the span; then random lengths 0..70
+    val cases = Seq(Array(Double.NaN)) ++ (0 until span).map(series) ++
+      Seq.fill(Trials)(series(rnd.nextInt(71)))
+    for (xs <- cases) {
+      val ref = xs.indices.map { i =>
+        val w = xs.slice(math.max(0, i - span + 1), i + 1).sorted(ord)
+        w((w.length - 1) / 2)
+      }
+      val med = median(xs)
+      assert(bits(med.toSeq) == bits(ref), s"median of ${xs.toSeq}")
+      // raw residual at 150.0, clipped and scaled series at 0.1
+      val residual = xs.indices.map(i => xs(i) - med(i)).toArray
+      val scaled = residual.map(r => math.max(r, 0.0) / 650.0)
+      for ((ys, thr) <- Seq(residual -> 150.0, scaled -> 0.1, xs -> 200.0)) {
+        val ref = ys.indices.filter(i => ord.gt(ys(i), thr) &&
+          (i == 0 || ord.lteq(ys(i - 1), thr)))
+        assert(edges(ys, thr) == ref, s"edges of ${ys.toSeq} at $thr")
+      }
+    }
+  }
+
   test("viterbi segmentation kernel == scalar DP reference (random models)") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamOps
 
@@ -141,16 +141,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState rolling median == batch kernel across micro-batch splits") {
     implicit val sqlCtx = spark.sqlContext
-    val span = 5
+    val span = graft.functions.rhythm.MedianSpan
     val rms = Seq(10.0, 4.0, 7.0, 1.0, 9.0, 2.0, 8.0, 4.0, 4.0, 6.5)
-    // batch reference: the actual Windows.rollingMedian kernel
-    val batch = rms.zipWithIndex
-      .map { case (v, i) => ("d1", i, v) }
-      .toDF("doc_id", "frame_id", "rms")
-      .withColumn("med",
-        graft.core.Windows.rollingMedian(col("rms"), span, "doc_id", "frame_id"))
-      .orderBy("frame_id")
-      .collect().map(_.getAs[Double]("med")).toSeq
+    // batch reference: the graft_trailing_median kernel over the whole series
+    graft.functions.expressions.register(spark)
+    val batch = Seq(rms).toDF("rms")
+      .select(expr("graft_trailing_median(rms)")).head().getSeq[Double](0)
     val mem = MemoryStream[StreamOps.FrameIn]
     def f(i: Int) = StreamOps.FrameIn("d1", i, rms(i),
       new Timestamp(1700000000000L + i * 1000L))
