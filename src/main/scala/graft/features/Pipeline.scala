@@ -1,5 +1,6 @@
 package graft.features
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,38 +58,31 @@ object Pipeline {
     // producers referenced >1× as separate projections, so the kernel
     // never re-inlines per field. Loops are byte-identical to the
     // standalone kernels; every oracle query stays bitwise-green.
+    // Built in three projections (the kernel, its fields, the vector), not
+    // one `withColumn` per column: each `withColumn` analyses the whole
+    // plan again. `withColumns` keeps `withColumn`'s semantics (an input
+    // column with an output's name is replaced in place).
     val thrArr = EffectiveLengthThresholds.mkString(", ")
-    val framed = seqs
+    val fields = ListMap(
+        "status" -> when(col("n_tok") === size(col("tokens")), lit("succeeded"))
+          .otherwise(concat(lit("error: n_tok mismatch, expected "),
+            col("n_tok"), lit(" got "), size(col("tokens")))),
+        "n_frames" -> size(col("__ll.frames"))) ++
+      Seq("rms_series", "peak_series", "env_series", "audible_flags")
+        .map(c => c -> col(s"__ll.$c")) ++
+      (for ((p, st) <- Seq("rms" -> "st_rms", "env" -> "st_env");
+            n <- Stats.StatNames) yield s"${p}_$n" -> col(s"__ll.$st.$n")) ++
+      EffectiveLengthThresholds.zipWithIndex.flatMap { case (thr, i) =>
+        Seq("first" -> s"first_audible_$thr", "last" -> s"last_audible_$thr",
+          "len" -> s"effective_len_$thr")
+          .map { case (f, c) => c -> expr(s"__ll.bounds[$i].$f") }
+      } + ("audible_frames" -> expr("size(filter(__ll.audible_flags, a -> a))"))
+    seqs
       .withColumn("__ll", expr(
         s"""graft_features_ll(tokens, ${Seqs.FrameSize}, ${Seqs.Hop},
            |${Seqs.SilenceThreshold}, CAST($EnvCoef AS DOUBLE),
            |array($thrArr))""".stripMargin.replace("\n", " ")))
-      .withColumn("status",
-        when(col("n_tok") === size(col("tokens")), lit("succeeded"))
-          .otherwise(concat(lit("error: n_tok mismatch, expected "),
-            col("n_tok"), lit(" got "), size(col("tokens")))))
-      .withColumn("n_frames", size(col("__ll.frames")))
-      .withColumn("rms_series", col("__ll.rms_series"))
-      .withColumn("peak_series", col("__ll.peak_series"))
-      .withColumn("env_series", col("__ll.env_series"))
-      .withColumn("audible_flags", col("__ll.audible_flags"))
-
-    val withStats = Seq("rms" -> "st_rms", "env" -> "st_env")
-      .foldLeft(framed) { case (df, (p, st)) =>
-        Stats.StatNames.foldLeft(df)((d, n) =>
-          d.withColumn(s"${p}_$n", col(s"__ll.$st.$n")))
-      }
-
-    val withLens = EffectiveLengthThresholds.zipWithIndex.foldLeft(withStats) {
-      case (df, (thr, i)) =>
-        df.withColumn(s"first_audible_$thr", expr(s"__ll.bounds[$i].first"))
-          .withColumn(s"last_audible_$thr", expr(s"__ll.bounds[$i].last"))
-          .withColumn(s"effective_len_$thr", expr(s"__ll.bounds[$i].len"))
-    }
-
-    withLens
-      .withColumn("audible_frames", expr(
-        "size(filter(audible_flags, a -> a))"))
+      .withColumns(fields)
       .withColumn("feature_vector", concat(
         PointInTime.sampleOffsets("rms_series"),
         PointInTime.sampleOffsets("env_series"),

@@ -98,9 +98,11 @@ object LanguageModel {
     }
     val bc = seqs.sparkSession.sparkContext.broadcast(dense)
     val slot = e.BigramNllSlots.put(bc)
-    seqs.filter(size(col("tokens")) >= 2)
-      .select(col("doc_id"),
-        call_function("graft_bigram_nll", col("tokens"), lit(slot)).as("__r"))
+    // the kernel is null for a doc of < 2 tokens, and the generator drops
+    // it: a `size(tokens) >= 2` filter would be pushed below the source's
+    // balance exchange and synthesize every doc's tokens twice
+    seqs.select(col("doc_id"), explode(array_compact(array(
+        call_function("graft_bigram_nll", col("tokens"), lit(slot))))).as("__r"))
       .select(col("doc_id"),
         col("__r")(0).as("n_bigrams"),
         (col("__r")(1).cast("double") /

@@ -86,7 +86,7 @@ object NaiveBayes {
     val DocMarker = 4096L
     val rows = seqs.select(col("source"),
         explode(expr(
-          s"concat(graft_unigram_counts(tokens), array(CAST(${(DocMarker << 40) | 1L} AS BIGINT)))")).as("gc"))
+          s"concat(coalesce(graft_unigram_counts(tokens), array()), array(CAST(${(DocMarker << 40) | 1L} AS BIGINT)))")).as("gc"))
       .groupBy(col("source"),
         graft.functions.expressions.gramOf(col("gc")).as("gram"))
       .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c_ts"))
@@ -200,11 +200,14 @@ object NaiveBayes {
       llkFlat(r.getLong(0).toInt * nS + sIdx(r.getString(1))) = r.getLong(2)
     }
     val priorsArr = priorRows.map(_.getLong(1)).toArray
-    seqs.filter(size(col("tokens")) > 0)
-      .select(col("doc_id"), col("source").as("label"),
-        call_function("graft_nb_score",
-          expr("graft_unigram_counts(tokens)"),
-          typedlit(llkFlat), typedlit(priorsArr)).as("__r"))
+    // docs without tokens drop out through the generator, not a filter: a
+    // filter would be pushed below the source's balance exchange and
+    // synthesize every doc's tokens twice
+    seqs.select(col("doc_id"), col("source").as("label"),
+        explode(array_compact(array(when(size(col("tokens")) > 0,
+          call_function("graft_nb_score",
+            expr("graft_unigram_counts(tokens)"),
+            typedlit(llkFlat), typedlit(priorsArr)))))).as("__r"))
       .select(col("doc_id"), col("label"),
         element_at(typedlit(sources), col("__r")(0).cast("int") + 1)
           .as("pred"),

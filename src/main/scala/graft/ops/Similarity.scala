@@ -333,6 +333,14 @@ object Similarity {
     ivfAssign(embeddings, cents(embeddings0, nCells))
   }
 
+  /** A collected `ARRAY<FLOAT>` or `ARRAY<DOUBLE>` value as doubles. */
+  private def doubles(v: Any): Array[Double] = v match {
+    case s: scala.collection.Seq[_] => s.map {
+      case f: java.lang.Float  => f.toDouble
+      case d: java.lang.Double => d.doubleValue()
+    }.toArray
+  }
+
   /** Assignment pass shared by the bootstrap and trained IVF paths —
     * r6 rewrite: the centroid table is model-sized (nCells rows), so it
     * collects to the driver and rides the plan as literal arrays into the
@@ -346,12 +354,7 @@ object Similarity {
       .orderBy(col("cell")).collect()
     require(rows.nonEmpty, "ivf assignment needs at least one centroid")
     val cellIds = rows.map(_.getLong(0))
-    val cvs: Array[Array[Double]] = rows.map(_.get(1) match {
-      case s: scala.collection.Seq[_] => s.map {
-        case f: java.lang.Float  => f.toDouble
-        case d: java.lang.Double => d.doubleValue()
-      }.toArray
-    })
+    val cvs = rows.map(r => doubles(r.get(1)))
     val dim = cvs.head.length
     require(cvs.forall(_.length == dim), "centroid dims must agree")
     embeddings.select(col("vec_id"), col("label"),
@@ -1845,10 +1848,10 @@ object Similarity {
     require(kEff > 0, "pq seed stride produced no codewords")
     val cb = new Array[Double](m * kEff * dsub)
     for (c <- 0 until kEff) {
-      val e = seedRows(c).getSeq[Float](0)
+      val e = doubles(seedRows(c).get(0))
       for (s <- 0 until m; p <- 0 until dsub) {
         val idx = s * dsub + p
-        if (idx < e.length) cb((s * kEff + c) * dsub + p) = e(idx).toDouble
+        if (idx < e.length) cb((s * kEff + c) * dsub + p) = e(idx)
       }
     }
     val emb = graft.core.Partitioning.balance(embeddings0, "vec_id")

@@ -3,6 +3,7 @@ package graft.sink
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Idempotent keyed sink with snapshot metadata — the engine's analog of
   * AFEC's `INSERT OR REPLACE INTO assets` keyed by filename
@@ -35,6 +36,20 @@ import org.apache.spark.sql.functions._
   *    0.1% of keys writes 0.1% of the bytes, not 100%.
   *  - AFEC's single-writer mutex (`Crawler.cpp:685`) disappears: the atomic
   *    pointer flip is the only serialization point and is O(1).
+  *
+  * == Commit protocol ==
+  * A commit writes `snap-N/` (parquet), then `snap-N.schema.json` (the
+  * written DataFrame's schema) and `snap-N.json` (the summary: kind,
+  * parent, row counts, per-file rows, throughput), then flips `_latest`
+  * through a temp file + ATOMIC_MOVE. Each file is written once, before the
+  * flip, so a reader never sees a half-described snapshot. Reads plan every
+  * snapshot with its recorded schema, so building [[read]], [[readAt]],
+  * [[pending]] or [[changedSince]] starts no Spark job (parquet schema
+  * inference is a job per read); a snapshot committed without a schema file
+  * is still inferred. A delta's `total_rows` is resolved before its commit
+  * from the parent's summary: `upserted + parent total − rows of the
+  * resolved parent whose key the delta rewrites`, one key-only semi-join
+  * count (see [[upsertDelta]]).
   */
 object KeyedSink extends SnapshotStore {
 
@@ -47,19 +62,18 @@ object KeyedSink extends SnapshotStore {
     else None
   }
 
-  private def snapKind(path: String, n: Int): String = {
-    val meta = Paths.get(path, s"snap-$n.json")
-    if (!Files.exists(meta)) "full"
-    else if (Files.readString(meta).contains("\"kind\": \"delta\"")) "delta"
-    else "full"
+  private def metaOf(path: String, n: Int): Option[String] = {
+    val f = Paths.get(path, s"snap-$n.json")
+    if (Files.exists(f)) Some(Files.readString(f)) else None
   }
 
+  private def snapKind(path: String, n: Int): String =
+    if (metaOf(path, n).exists(_.contains("\"kind\": \"delta\""))) "delta"
+    else "full"
+
   private def snapParent(path: String, n: Int): Int = {
-    val meta = Paths.get(path, s"snap-$n.json")
-    val p =
-      if (!Files.exists(meta)) 0
-      else "\"parent\": (\\d+)".r.findFirstMatchIn(Files.readString(meta))
-        .map(_.group(1).toInt).getOrElse(0)
+    val p = metaOf(path, n).flatMap("\"parent\": (\\d+)".r.findFirstMatchIn(_))
+      .map(_.group(1).toInt).getOrElse(0)
     // a parent must be strictly older — a self-referential or forward
     // pointer (corrupt/hand-edited metadata) would otherwise spin the
     // chain walkers (readSnap recursion, deltaChainKeys loop) forever
@@ -69,10 +83,25 @@ object KeyedSink extends SnapshotStore {
     p
   }
 
+  private def schemaFile(path: String, n: Int) =
+    Paths.get(path, s"snap-$n.schema.json")
+
+  /** Snapshot `n`'s own files (not resolved through its chain), planned
+    * with the schema its commit recorded — no inference job. A snapshot
+    * committed without a schema file is inferred. */
+  private def snapFiles(spark: SparkSession, path: String, n: Int): DataFrame = {
+    val f = schemaFile(path, n)
+    val reader =
+      if (!Files.exists(f)) spark.read
+      else spark.read.schema(DataType.fromJson(Files.readString(f))
+        .asInstanceOf[StructType])
+    reader.parquet(s"$path/snap-$n")
+  }
+
   /** Read snapshot `n` resolved through its delta chain (newest wins). */
   private def readSnap(spark: SparkSession, path: String, n: Int,
                        key: String): DataFrame = {
-    val cur = spark.read.parquet(s"$path/snap-$n")
+    val cur = snapFiles(spark, path, n)
     if (snapKind(path, n) == "full") cur
     else {
       val base = readSnap(spark, path, snapParent(path, n), key)
@@ -114,12 +143,6 @@ object KeyedSink extends SnapshotStore {
     }
   }
 
-  private def countFiles(snapDir: String): Int = {
-    val f = new java.io.File(snapDir)
-    Option(f.listFiles()).map(_.count(_.getName.endsWith(".parquet")))
-      .getOrElse(0)
-  }
-
   /** Per-partition-file row counts straight from the parquet footers —
     * O(files) metadata reads, no data scan (the per-partition
     * lineage/row-count metrics an Iceberg snapshot summary carries;
@@ -148,29 +171,33 @@ object KeyedSink extends SnapshotStore {
     else s""", "wall_ms": $wallMs, "rows_per_sec": ${
       if (wallMs == 0) rows * 1000L else rows * 1000L / wallMs}"""
 
+  /** Write snapshot `next`'s schema file and summary, then flip `_latest`
+    * to it — the commit point. `total` is the resolved logical row count;
+    * the throughput counts the rows WRITTEN (a delta writes only its
+    * upserts). */
   private def commit(path: String, next: Int, kind: String, total: Long,
-                     nUp: Long, nDel: Long, nPart: Int, key: String,
+                     nUp: Long, nDel: Long, key: String, schema: StructType,
                      streamBatch: Option[Long] = None,
                      wallMs: Long = -1L): CommitStats = {
     val parent = latestSnapshot(path).getOrElse(0)
     val fileRows = fileRowCounts(s"$path/snap-$next")
+    val files = fileRows
       .map { case (n, r) => s"""{"file": "$n", "rows": $r}""" }
       .mkString("[", ", ", "]")
-    // rows WRITTEN to this snapshot: a full snapshot rewrites `total`
-    // rows, a delta only its upserts (total = -1 at this stage)
     val sb = streamBatch.map(b => s""", "stream_batch": $b""").getOrElse("") +
-      throughputJson(wallMs, if (total >= 0) total else nUp)
+      throughputJson(wallMs, if (kind == "delta") nUp else total)
     val meta =
       s"""{"snapshot": $next, "kind": "$kind", "total_rows": $total,
          | "upserted_rows": $nUp, "deleted_rows": $nDel,
-         | "partitions": $nPart, "parent": $parent,
-         | "key": "$key"$sb, "file_rows": $fileRows}""".stripMargin.replace("\n", "")
+         | "partitions": ${fileRows.size}, "parent": $parent,
+         | "key": "$key"$sb, "file_rows": $files}""".stripMargin.replace("\n", "")
+    Files.writeString(schemaFile(path, next), schema.json)
     Files.writeString(Paths.get(path, s"snap-$next.json"), meta)
     val tmp = Paths.get(path, "_latest.tmp")
     Files.writeString(tmp, s"snap-$next")
     Files.move(tmp, latestFile(path), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    CommitStats(next, total, nUp, nDel, nPart)
+    CommitStats(next, total, nUp, nDel, fileRows.size)
   }
 
   /** Copy-on-write upsert of `updates` (and optional `deletes`) at `path`.
@@ -202,60 +229,54 @@ object KeyedSink extends SnapshotStore {
       }
     }
     val obs = Observation(s"keyed-sink-$next")
-    val snapDir = s"$path/snap-$next"
     val t0 = System.nanoTime()
-    merged.observe(obs,
+    val out = merged.observe(obs,
         count(lit(1)).as("total"),
         sum(when(col("__upd"), 1L).otherwise(0L)).as("upserted"))
       .drop("__upd")
-      .write.mode("overwrite").parquet(snapDir)
+    out.write.mode("overwrite").parquet(s"$path/snap-$next")
     val wallMs = (System.nanoTime() - t0) / 1000000L
     val row = obs.get
     val total = row("total").asInstanceOf[Long]
     val nUp = Option(row("upserted")).map(_.asInstanceOf[Long]).getOrElse(0L)
     val nDel = delKeys.map(_.count()).getOrElse(0L) // count on the checkpoint
-    commit(path, next, "full", total, nUp, nDel, countFiles(snapDir), key,
-      streamBatch, wallMs)
+    commit(path, next, "full", total, nUp, nDel, key, out.schema, streamBatch,
+      wallMs)
   }
 
   /** Merge-on-read upsert: writes ONLY `updates` as a delta snapshot.
-    * `totalRows` in the stats is the post-merge logical row count (Iceberg
-    * would read it from the snapshot summary; here it costs one key-column
-    * scan of the chain). */
+    * `totalRows` is the post-merge logical row count, resolved before the
+    * one commit (Iceberg reads it from the snapshot summary the same way):
+    * `upserted + parent total − rows of the resolved parent whose key is in
+    * the delta`. The parent total comes from its summary (a key-only count
+    * of the resolved parent when the summary lacks one); the last term is
+    * one key-only semi-join count against the written delta's keys. */
   def upsertDelta(spark: SparkSession, path: String, updates: DataFrame,
                   key: String,
                   streamBatch: Option[Long] = None): CommitStats = {
     Files.createDirectories(Paths.get(path))
-    val parent = latestSnapshot(path)
-    if (parent.isEmpty)
-      return upsert(spark, path, updates, key, streamBatch = streamBatch)
-    val next = parent.get + 1
+    val parent = latestSnapshot(path) match {
+      case Some(p) => p
+      case None => return upsert(spark, path, updates, key, streamBatch = streamBatch)
+    }
+    val next = parent + 1
     val obs = Observation(s"keyed-sink-delta-$next")
     val snapDir = s"$path/snap-$next"
     val t0 = System.nanoTime()
     updates.observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(snapDir)
-    val deltaWallMs = (System.nanoTime() - t0) / 1000000L
+    val wallMs = (System.nanoTime() - t0) / 1000000L
     val nUp = obs.get("n").asInstanceOf[Long]
-    val stats = commit(path, next, "delta", -1L, nUp, 0L,
-      countFiles(snapDir), key, streamBatch, deltaWallMs)
-    val total = readSnap(spark, path, next, key).select(col(key)).count()
-    // refresh metadata with the resolved total — via temp file + ATOMIC_MOVE
-    // (same protocol as the _latest pointer): the pointer already flipped,
-    // so an in-place rewrite could expose mid-truncate metadata to a
-    // concurrent read(), and snapKind() would misread the delta as a full
-    // snapshot, silently dropping every non-updated row
-    val fileRows = fileRowCounts(snapDir)
-      .map { case (n, r) => s"""{"file": "$n", "rows": $r}""" }
-      .mkString("[", ", ", "]")
-    val metaTmp = Paths.get(path, s"snap-$next.json.tmp")
-    val sb = streamBatch.map(b => s""", "stream_batch": $b""").getOrElse("") +
-      throughputJson(deltaWallMs, nUp)
-    Files.writeString(metaTmp,
-      s"""{"snapshot": $next, "kind": "delta", "total_rows": $total, "upserted_rows": $nUp, "deleted_rows": 0, "partitions": ${stats.partitions}, "parent": ${parent.get}, "key": "$key"$sb, "file_rows": $fileRows}""")
-    Files.move(metaTmp, Paths.get(path, s"snap-$next.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    stats.copy(totalRows = total)
+    val parentKeys = readSnap(spark, path, parent, key).select(col(key))
+    val parentTotal = metaOf(path, parent)
+      .flatMap("\"total_rows\": (-?\\d+)".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong).filter(_ >= 0L)
+      .getOrElse(parentKeys.count())
+    val deltaKeys = spark.read.schema(StructType(Seq(updates.schema(key))))
+      .parquet(snapDir)
+    val replaced = parentKeys.join(deltaKeys, Seq(key), "left_semi").count()
+    commit(path, next, "delta", nUp + parentTotal - replaced, nUp, 0L, key,
+      updates.schema, streamBatch, wallMs)
   }
 
   /** Fold the delta chain into one full snapshot (Iceberg rewrite-data-files
@@ -266,13 +287,12 @@ object KeyedSink extends SnapshotStore {
     val folded = readSnap(spark, path, cur.get, key)
     val next = cur.get + 1
     val obs = Observation(s"keyed-sink-compact-$next")
-    val snapDir = s"$path/snap-$next"
     val t0 = System.nanoTime()
     folded.observe(obs, count(lit(1)).as("total"))
-      .write.mode("overwrite").parquet(snapDir)
+      .write.mode("overwrite").parquet(s"$path/snap-$next")
     val wallMs = (System.nanoTime() - t0) / 1000000L
     val total = obs.get("total").asInstanceOf[Long]
-    Some(commit(path, next, "full", total, 0L, 0L, countFiles(snapDir), key,
+    Some(commit(path, next, "full", total, 0L, 0L, key, folded.schema,
       wallMs = wallMs))
   }
 
@@ -304,7 +324,7 @@ object KeyedSink extends SnapshotStore {
     var acc: List[DataFrame] = Nil
     while (i > m) {
       if (snapKind(path, i) == "full") return None
-      acc ::= spark.read.parquet(s"$path/snap-$i").select(col(key))
+      acc ::= snapFiles(spark, path, i).select(col(key))
       i = snapParent(path, i)
     }
     if (i != m) None

@@ -281,6 +281,23 @@ class FeatureEngSpec extends AnyFunSuite {
     assert(out.head.getString(2) == "sA" && out.head.getLong(4) == 0L)
   }
 
+  test("NB degenerate: a null-token doc counts in its source's prior, is not classified") {
+    graft.functions.expressions.register(spark)
+    val docs = Seq(("d1", Some(Seq(1, 2)), "sA"), ("d2", Some(Seq(3)), "sA"),
+      ("d3", Some(Seq(1)), "sB"), ("d4", None, "sB"))
+      .toDF("doc_id", "tokens", "source")
+    // two docs per source -> equal priors ln(1/2); dropping d4 would give
+    // sA ln(2/3) and sB ln(1/3)
+    val half = java.math.BigDecimal.valueOf(math.log(0.5) * 1000000)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+    val priors = graft.ops.NaiveBayes.fitModel(docs)._2.collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(priors == Map("sA" -> half, "sB" -> half))
+    val ids = graft.ops.NaiveBayes.trainAndClassify(docs).collect()
+      .map(_.getString(0)).toSet
+    assert(ids == Set("d1", "d2", "d3"))
+  }
+
   test("perplexity buckets: exact thirds per source, NLL-rank order") {
     graft.functions.expressions.register(spark)
     // 6 docs in one source -> 2 head, 2 middle, 2 tail by avg_nll rank;

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sink.KeyedSink
 
@@ -395,5 +397,145 @@ class KeyedSinkSpec extends AnyFunSuite {
       KeyedSink.read(spark, path).get.count())
     intercept[IllegalStateException](
       KeyedSink.changedSince(spark, path, 1, 2).get.count())
+  }
+
+  private def totalRowsMeta(path: String, n: Int): Long =
+    "\"total_rows\": (-?\\d+)".r
+      .findFirstMatchIn(Files.readString(Paths.get(path, s"snap-$n.json")))
+      .map(_.group(1).toLong).get
+
+  test("delta totalRows equals the resolved read: chains, duplicate keys, compacted base, unknown parent total") {
+    val path = freshPath()
+    val k = "doc_id"
+    def delta(rows: (String, Int)*) = {
+      val st = KeyedSink.upsertDelta(spark, path, rows.toDF(k, "v"), k)
+      val n = KeyedSink.read(spark, path, k).get.count()
+      assert(st.totalRows == n, s"snapshot ${st.snapshot}")
+      // the summary is written once, resolved, before the pointer flip
+      assert(totalRowsMeta(path, st.snapshot) == n)
+      assert(!Files.exists(Paths.get(path, s"snap-${st.snapshot}.json.tmp")))
+      st
+    }
+    KeyedSink.upsert(spark, path, Seq(("a", 1), ("b", 1), ("c", 1)).toDF(k, "v"), k)
+    delta(("a", 2), ("d", 1))                       // chain of 1
+    delta(("d", 2), ("e", 1), ("e", 2))             // chain of 2, duplicate new key
+    delta(("e", 3), ("b", 2), ("b", 3), ("f", 1))   // chain of 3, replaces a duplicate
+    assert(KeyedSink.compact(spark, path, k).exists(_.totalRows ==
+      KeyedSink.read(spark, path, k).get.count()))
+    delta(("a", 3), ("a", 4), ("g", 1))             // over the compacted base
+    val last = delta(("g", 2))
+    // a parent whose summary carries no resolved total: counted, not trusted
+    val meta = Paths.get(path, s"snap-${last.snapshot}.json")
+    val txt = Files.readString(meta)
+    Files.writeString(meta, txt.replaceFirst("\"total_rows\": \\d+", "\"total_rows\": -1"))
+    delta(("h", 1), ("c", 2))
+    // an upsertDelta with no parent is a full first commit
+    val fresh = freshPath()
+    val st = KeyedSink.upsertDelta(spark, fresh, Seq(("x", 1), ("x", 2)).toDF(k, "v"), k)
+    assert(st.totalRows == 2 && KeyedSink.read(spark, fresh, k).get.count() == 2)
+  }
+
+  test("recorded-schema reads return exactly the inferred schema; a snapshot without one still reads") {
+    val path = freshPath()
+    val k = "doc_id"
+    // non-nullable, nested, array, map and decimal columns, then evolution
+    val base = spark.range(4).select(
+      concat(lit("d"), col("id").cast("string")).as(k),
+      col("id").as("v"),
+      struct(col("id").as("x"), array(col("id").cast("double")).as("xs")).as("st"),
+      map(lit("m"), col("id").cast("int")).as("mp"),
+      lit(null).cast("decimal(12,3)").as("dec"))
+    KeyedSink.upsert(spark, path, base, k)                                  // 1 full
+    KeyedSink.upsertDelta(spark, path,
+      base.filter(col("v") < 2).withColumn("w", lit("new")), k)             // 2 adds w
+    KeyedSink.upsertDelta(spark, path, base.select(k, "v").limit(1), k)     // 3 omits columns
+    KeyedSink.upsert(spark, path, Seq(("z", 9L)).toDF(k, "v"), k)           // 4 full, evolved
+    KeyedSink.compact(spark, path, k)                                       // no-op: 4 is full
+    KeyedSink.upsertDelta(spark, path, Seq(("z", 10L)).toDF(k, "v"), k)     // 5
+    assert(KeyedSink.compact(spark, path, k).isDefined)                     // 6 full
+    val snaps = 1 to 6
+    snaps.foreach(n => assert(Files.exists(Paths.get(path, s"snap-$n.schema.json")), n))
+    def state(n: Int) = {
+      val df = KeyedSink.readAt(spark, path, n, k).get
+      (df.schema, df.orderBy(k).collect().map(_.toString).toSeq)
+    }
+    val recorded = snaps.map(state)
+    // each snapshot's own files: recorded schema == parquet inference
+    for (n <- snaps) {
+      val dir = s"$path/snap-$n"
+      val rec = org.apache.spark.sql.types.DataType.fromJson(
+        Files.readString(Paths.get(path, s"snap-$n.schema.json")))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      assert(spark.read.schema(rec).parquet(dir).schema ==
+        spark.read.parquet(dir).schema, s"snapshot $n")
+    }
+    // without the schema files every snapshot is inferred, and reads the same
+    snaps.foreach(n => Files.delete(Paths.get(path, s"snap-$n.schema.json")))
+    val inferred = snaps.map(state)
+    for ((n, (r, i)) <- snaps.zip(recorded.zip(inferred))) {
+      assert(r._1 == i._1, s"snapshot $n schema: ${r._1.treeString} vs ${i._1.treeString}")
+      assert(r._1.fieldNames.toSeq == i._1.fieldNames.toSeq)
+      assert(r._2 == i._2, s"snapshot $n rows")
+    }
+    assert(recorded(1)._1.fieldNames.contains("w"))
+  }
+
+  /** The Spark jobs `body` starts, each as its SQL execution id (None for a
+    * job outside any query execution — the parquet schema-inference and
+    * file-listing jobs). Marker jobs before and after `body` fence the
+    * listener's asynchronous event queue. */
+  private def jobsDuring(body: => Unit): Seq[Option[String]] = {
+    val sc = spark.sparkContext
+    val start = s"graft-start-${System.nanoTime()}"
+    val end = s"graft-end-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    @volatile var state = 0 // 0 before start, 1 recording, 2 done
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(name: String) = props.flatMap(p => Option(p.getProperty(name)))
+        prop("spark.job.description") match {
+          case Some(`start`) => state = 1
+          case Some(`end`) => state = 2
+          case _ => if (state == 1) seen.add(prop("spark.sql.execution.id"))
+        }
+      }
+    }
+    def marker(name: String, until: Int): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (state < until && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(state >= until, s"listener never saw $name")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(start, 1)
+      body
+      marker(end, 2)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  test("building read / readAt / pending starts no Spark job; upsertDelta runs no schema inference") {
+    val path = freshPath()
+    val k = "doc_id"
+    KeyedSink.upsert(spark, path,
+      Seq(("a", 1, 10.0), ("b", 1, 20.0)).toDF(k, "v", "x"), k)
+    val delta = Seq(("b", 2, 21.0), ("c", 1, 30.0)).toDF(k, "v", "x")
+    val deltaJobs = jobsDuring(KeyedSink.upsertDelta(spark, path, delta, k))
+    assert(deltaJobs.nonEmpty && deltaJobs.forall(_.isDefined),
+      s"upsertDelta started jobs outside a query execution: $deltaJobs")
+    val src = Seq(("a", 1), ("b", 3), ("d", 1)).toDF(k, "v")
+    val buildJobs = jobsDuring {
+      KeyedSink.read(spark, path, k)
+      KeyedSink.readAt(spark, path, 1, k)
+      KeyedSink.pending(spark, path, src, k, "v")
+      KeyedSink.changedSince(spark, path, 1, 2, k)
+    }
+    assert(buildJobs.isEmpty, s"plan building started ${buildJobs.size} jobs")
+    // the marker fence sees jobs at all: an inferred read starts one
+    Files.delete(Paths.get(path, "snap-1.schema.json"))
+    assert(jobsDuring(KeyedSink.read(spark, path, k)).nonEmpty)
   }
 }

@@ -2605,6 +2605,19 @@ class OpsSpec extends AnyFunSuite {
     assert(re == codes)
   }
 
+  test("pq: ARRAY<DOUBLE> embeddings train the same codebook and codes as floats") {
+    val emb = pqFixture
+    val dbl = emb.withColumn("embedding", col("embedding").cast("array<double>"))
+    def table(df: org.apache.spark.sql.DataFrame) =
+      Similarity.pqTrainTable(df, m = 2, dsub = 4, ksub = 2, iters = 2)
+        .collect().map(_.toString).sorted.toSeq
+    def codes(df: org.apache.spark.sql.DataFrame) =
+      Similarity.pqCodes(df, 2, 4, 2, 2).collect().map(_.toString).sorted.toSeq
+    // floats widen to doubles exactly, so both element types agree bitwise
+    assert(table(dbl) == table(emb))
+    assert(codes(dbl) == codes(emb))
+  }
+
   test("pq: trained codewords sit at the cluster subspace centroids") {
     val emb = pqFixture
     val cb = Similarity.pqTrainTable(emb, m = 2, dsub = 4, ksub = 2, iters = 2)

@@ -44,6 +44,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(f.sameElements(u))
   }
 
+  test("an input column with an output's name is replaced in place, as withColumn does") {
+    val seqs = mkSeqs(Seq(("d1", noise.take(3000), 3000, "s")))
+      .withColumn("status", lit("stale")).withColumn("n_frames", lit(-1L))
+    val fused = Pipeline.featuresLl(seqs)
+    val unfused = Pipeline.featuresLlUnfused(seqs)
+    assert(fused.schema == unfused.schema)
+    assert(fused.columns.take(6).toSeq ==
+      Seq("doc_id", "tokens", "n_tok", "source", "status", "n_frames"))
+    assert(fused.collect().map(_.toString).sameElements(
+      unfused.collect().map(_.toString)))
+    assert(fused.select("status").as[String].head() == "succeeded")
+  }
+
   test("bitwise token-array passthrough on every materialized row") {
     val seqs = mkSeqs(Seq(("d1", noise, noise.length, "s")))
     val out = Pipeline.featuresLl(seqs).select("tokens").as[Seq[Int]].head()

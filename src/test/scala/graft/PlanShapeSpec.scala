@@ -52,12 +52,21 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
       assert(exchanges.size <= 1 &&
         exchanges.forall(_.shuffleOrigin == REPARTITION_BY_NUM), s"\n$plan")
-      // the tokens are synthesized once: no predicate re-evaluates the
-      // token or frame kernels below the balance exchange
-      val tokenGens = collect(plan) { case p => p }
-        .flatMap(_.expressions).map(_.toString)
-        .map("tokengen\\(".r.findAllIn(_).size).sum
-      assert(tokenGens == 1, s"\n$plan")
+      assert(tokenGens(plan) == 1, s"\n$plan")
+    }
+
+  /** Token-synthesis calls in a plan: 1 when no predicate re-evaluates the
+    * token kernel below the balance exchange. */
+  private def tokenGens(plan: SparkPlan): Int =
+    collect(plan) { case p => p }.flatMap(_.expressions).map(_.toString)
+      .map("tokengen\\(".r.findAllIn(_).size).sum
+
+  // the scoring passes drop token-less docs through a generator, not a
+  // filter that Catalyst would push below the exchange
+  for (q <- Seq("kn_bigram_nll", "lm_bigram_nll", "nb_classify"))
+    test(s"$q: the scoring pass synthesizes tokens once") {
+      val plan = executed(q)
+      assert(tokenGens(plan) == 1, s"\n$plan")
     }
 
   test("in-row onset queries keep the frame-row row set") {
