@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -84,10 +84,6 @@ object expressions {
       es => PadFrames(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_pack_ngrams",
       es => PackNgrams(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_skipgrams",
-      es => SkipGrams(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_skipgram_counts",
-      es => SkipGramCounts(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_kmin",
       es => KMinAgg(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_kmin_d",
@@ -98,10 +94,9 @@ object expressions {
       es => TokenFeats(es(0)), "built-in")
     reg.createOrReplaceTempFunction("graft_hll_tokens",
       es => HllTokensAgg(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_unigram_counts",
-      es => UnigramCounts(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bigram_counts",
-      es => BigramCounts(es(0)), "built-in")
+    reg.createOrReplaceTempFunction("graft_gram_counts",
+      es => GramCounts(es(0), es(1),
+        if (es.length > 2) es(2) else Literal(0)), "built-in")
     reg.createOrReplaceTempFunction("graft_pq_assign",
       es => PqAssignKernel(es(0), es(1), es(2), es(3), es(4)), "built-in")
     reg.createOrReplaceTempFunction("graft_ivf_assign",
@@ -150,18 +145,6 @@ object expressions {
     fvkernel.register(spark)
   }
 
-  /** The ONE definition of the [[UnigramCounts]] packing layout:
-    * `(gram << 40) | count`. Query-side decoders — use these instead of
-    * re-inlining the shift/mask at call sites. */
-  val GramCountMask: Long = (1L << 40) - 1
-  // unsigned shift: a 24-bit BIGRAM gram ([[BigramCounts]]) occupies bits
-  // 40..63, so an arithmetic shift would sign-extend grams ≥ 2^23;
-  // identical to the arithmetic shift on the 12-bit unigram domain
-  def gramOf(gc: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.shiftrightunsigned(gc, 40)
-  def cntOf(gc: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    gc.bitwiseAND(org.apache.spark.sql.functions.lit(GramCountMask))
-
   private[functions] def litIntPub(e: Expression): Int = litInt(e)
 
   private def litInt(e: Expression): Int =
@@ -180,6 +163,18 @@ object expressions {
       case v: Long    => v.toDouble
       case v => throw new IllegalArgumentException(s"expected double literal, got $v")
     }
+
+  /** An `ARRAY<FLOAT|DOUBLE>` value (`dt` its array type) as doubles;
+    * floats widen exactly. Any other element type raises an error naming
+    * the calling function `fn`. */
+  private def doubles(any: Any, dt: DataType, fn: String): Array[Double] = {
+    val ad = any.asInstanceOf[ArrayData]
+    dt.asInstanceOf[ArrayType].elementType match {
+      case FloatType  => ad.toFloatArray().map(_.toDouble)
+      case DoubleType => ad.toDoubleArray()
+      case other => throw new IllegalArgumentException(s"$fn over $other")
+    }
+  }
 
   // ------------------------------------------------------------------
 
@@ -272,116 +267,6 @@ object expressions {
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
       copy(tokens = c(0), kE = c(1))
-  }
-
-  /** graft_skipgrams(tokens ARRAY<INT>, window INT) → ARRAY<BIGINT>
-    *
-    * Skip-gram instance codes: for every position `i` and distance
-    * `d ∈ [1, window]`, `((tokens[i] + 2048) * 4096 + (tokens[i+d] + 2048))
-    * * 4 + d` — the [[PackNgrams]] bigram layout with the distance packed
-    * into the low 2 bits. One tight primitive loop per row; replaces the
-    * interpreted `transform(sequence(...))` HOF form on the per-token path
-    * ([[graft.ops.Sketches.skipgramTop]]). */
-  case class SkipGrams(tokens: Expression, wE: Expression)
-      extends Expression with CodegenFallback {
-    // lazy, like PackNgrams above: auto-alias copies must not evaluate
-    private lazy val w = {
-      val v = litInt(wE)
-      require(v >= 1 && v <= 3, s"skip-gram window must be 1..3, got $v")
-      v
-    }
-    override def children: Seq[Expression] = Seq(tokens, wE)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = tokens.nullable
-    override def eval(input: InternalRow): Any = {
-      val tAny = tokens.eval(input)
-      if (tAny == null) return null
-      val arr = tAny.asInstanceOf[ArrayData].toIntArray()
-      val n = arr.length
-      var total = 0
-      var d = 1
-      while (d <= w) { total += math.max(n - d, 0); d += 1 }
-      val out = new Array[Long](total)
-      var o = 0
-      d = 1
-      while (d <= w) {
-        var i = 0
-        val m = n - d
-        while (i < m) {
-          out(o) = ((arr(i) + 2048L) * 4096L + (arr(i + d) + 2048L)) * 4L + d
-          i += 1; o += 1
-        }
-        d += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
-    }
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(tokens = c(0), wE = c(1))
-  }
-
-  /** graft_skipgram_counts(tokens ARRAY<INT>, window INT) → ARRAY<BIGINT>
-    *
-    * Per-row COUNTED skip-gram codes, packed `(code << 32) | count` in
-    * ascending code order — the [[BigramCounts]] sort + run-length
-    * treatment of [[SkipGrams]]' instance codes (code < 2^26, per-doc
-    * count < 2^32 under the 8192 analysis cap — lossless packing, no
-    * sign-bit hazard). Downstream global counting sees only each doc's
-    * DISTINCT codes pre-counted (~2.4× fewer rows on the synthetic
-    * corpus — silence runs and token-domain collisions repeat codes
-    * within a doc), shrinking both the aggregation hash maps and the
-    * count exchange of [[graft.ops.Sketches.skipgramTop]]. */
-  case class SkipGramCounts(tokens: Expression, wE: Expression)
-      extends Expression with CodegenFallback {
-    private lazy val w = {
-      val v = litInt(wE)
-      require(v >= 1 && v <= 3, s"skip-gram window must be 1..3, got $v")
-      v
-    }
-    override def children: Seq[Expression] = Seq(tokens, wE)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = tokens.nullable
-    override def eval(input: InternalRow): Any = {
-      val tAny = tokens.eval(input)
-      if (tAny == null) return null
-      val arr = tAny.asInstanceOf[ArrayData].toIntArray()
-      val n = arr.length
-      var total = 0
-      var d = 1
-      while (d <= w) { total += math.max(n - d, 0); d += 1 }
-      if (total == 0)
-        return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-      val codes = new Array[Long](total)
-      var o = 0
-      d = 1
-      while (d <= w) {
-        var i = 0
-        val m = n - d
-        while (i < m) {
-          codes(o) = ((arr(i) + 2048L) * 4096L + (arr(i + d) + 2048L)) * 4L + d
-          i += 1; o += 1
-        }
-        d += 1
-      }
-      java.util.Arrays.sort(codes)
-      var distinct = 1
-      var i = 1
-      while (i < total) { if (codes(i) != codes(i - 1)) distinct += 1; i += 1 }
-      val out = new Array[Long](distinct)
-      var j = 0
-      var runStart = 0
-      i = 1
-      while (i <= total) {
-        if (i == total || codes(i) != codes(runStart)) {
-          out(j) = (codes(runStart) << 32) | (i - runStart).toLong
-          j += 1
-          runStart = i
-        }
-        i += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
-    }
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(tokens = c(0), wE = c(1))
   }
 
   /** Bounded k-min buffer: a max-heap of the `k` smallest values seen.
@@ -702,114 +587,167 @@ object expressions {
 
   // ------------------------------------------------------------------
 
-  /** graft_unigram_counts(tokens ARRAY<INT>) → ARRAY<BIGINT>
+  /** graft_gram_counts(tokens ARRAY<INT>, width INT[, window INT])
+    * → ARRAY<BIGINT>
     *
-    * Per-row unigram histogram over the 12-bit token domain, emitted as
-    * packed `(gram << 40) | count` longs in ASCENDING gram order —
-    * `gram = token + 2048` (the [[PackNgrams]] k=1 identity). One tight
-    * 4096-slot histogram pass per row replaces the explode +
-    * (doc, gram) hash-aggregate that per-doc unigram statistics
-    * ([[graft.ops.NaiveBayes]], tf-idf) would otherwise need: downstream
-    * explodes see only the DISTINCT grams of each doc (~3× fewer rows on
-    * the synthetic corpus) and no corpus-sized aggregation runs at all.
-    * Unpack with [[gramOf]] / [[cntOf]] (`shiftright(v, 40)` /
-    * `v & ((1L << 40) - 1)` — the shift MUST be on a long; `1 << 40`
-    * wraps to 256 in 32-bit arithmetic). Counts are bounded by the
-    * analysis cap (8192 ≪ 2^40), so packing is lossless. */
-  case class UnigramCounts(tokens: Expression)
+    * Per-row counted grams: every distinct gram of the row once, packed
+    * `(code << 32) | n` ([[pack]]) in ascending code order. Over
+    * `g = token + 2048` the codes are
+    *  - width 1: `g` (the [[PackNgrams]] k=1 identity);
+    *  - width 2: `g(i)·4096 + g(i+1)` (the k=2 identity);
+    *  - width 2, window w ∈ 1..3: `(g(i)·4096 + g(i+d))·4 + d` for every
+    *    distance `d ≤ w` (skip-grams, the distance in the low 2 bits).
+    * Unigrams count in one 4096-slot histogram pass; the wider shapes sort
+    * the row's codes and run-length them. Every shape rejects a token
+    * outside the 12-bit domain, where two grams would share a code.
+    * Downstream explodes ([[explodeGramCounts]]) see each row's distinct
+    * grams already counted, so no corpus-sized `(row, gram)` aggregation
+    * runs. code < 2^26 and n ≤ the row length < 2^31: the packing is
+    * lossless and never sets the sign bit. */
+  case class GramCounts(tokens: Expression, widthE: Expression,
+      windowE: Expression = Literal(0))
       extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(tokens)
+    // lazy, like PackNgrams above: auto-alias copies must not evaluate
+    private lazy val shape = GramShape(litInt(widthE), litInt(windowE))
+    override def children: Seq[Expression] = Seq(tokens, widthE, windowE)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = tokens.nullable
     override def eval(input: InternalRow): Any = {
       val tAny = tokens.eval(input)
       if (tAny == null) return null
-      val arr = tAny.asInstanceOf[ArrayData].toIntArray()
-      val hist = new Array[Long](4096)
+      // toIntArray copies, so the domain shift can happen in place
+      val gs = tAny.asInstanceOf[ArrayData].toIntArray()
+      var i = 0
+      while (i < gs.length) {
+        val g = gs(i) + 2048
+        require(g >= 0 && g < 4096,
+          s"token out of 12-bit domain [-2048, 2047]: ${gs(i)}")
+        gs(i) = g
+        i += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(
+        if (shape.width == 1) histogram(gs) else runLength(pairCodes(gs)))
+    }
+    private def histogram(gs: Array[Int]): Array[Long] = {
+      val hist = new Array[Int](4096)
       var distinct = 0
       var i = 0
-      while (i < arr.length) {
-        val g = arr(i) + 2048
-        require(g >= 0 && g < 4096,
-          s"token out of 12-bit domain [-2048, 2047]: ${arr(i)}")
-        if (hist(g) == 0L) distinct += 1
-        hist(g) += 1L
+      while (i < gs.length) {
+        if (hist(gs(i)) == 0) distinct += 1
+        hist(gs(i)) += 1
         i += 1
       }
       val out = new Array[Long](distinct)
       var g = 0
       var j = 0
       while (g < 4096) {
-        if (hist(g) > 0L) { out(j) = (g.toLong << 40) | hist(g); j += 1 }
+        if (hist(g) > 0) { out(j) = pack(g, hist(g)); j += 1 }
         g += 1
       }
-      UnsafeArrayData.fromPrimitiveArray(out)
+      out
     }
-    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(tokens = c(0))
-  }
-
-  // ------------------------------------------------------------------
-
-  /** graft_bigram_counts(tokens ARRAY<INT>) → ARRAY<BIGINT>
-    *
-    * Per-row BIGRAM histogram, emitted as packed `(gram << 40) | count`
-    * longs in ASCENDING gram order — `gram` the exact 24-bit
-    * [[PackNgrams]] k=2 identity `(t1+2048)·4096 + (t2+2048)`. The bigram
-    * sibling of [[UnigramCounts]]: one sort + run-length pass over the
-    * row's packed bigrams (the 16.7M-slot dense histogram of the unigram
-    * kernel does not fit per row) replaces the corpus-wide explode +
-    * `(doc, gram)` hash-aggregate the n-gram LM scorers
-    * ([[graft.ops.LanguageModel.scoreBigramNll]] / `scoreBigramKn`) paid
-    * before — downstream explodes see only the DISTINCT bigrams of each
-    * doc (~2.4× fewer rows on the synthetic corpus) and no corpus-sized
-    * aggregation exchange runs at all. Unpack with [[gramOf]] /
-    * [[cntOf]]; counts are bounded by the analysis cap (8192 ≪ 2^40) so
-    * the packing is lossless, and gram < 2^24 keeps `gram << 40`
-    * overflow-free. */
-  case class BigramCounts(tokens: Expression)
-      extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(tokens)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = tokens.nullable
-    override def eval(input: InternalRow): Any = {
-      val tAny = tokens.eval(input)
-      if (tAny == null) return null
-      val arr = tAny.asInstanceOf[ArrayData].toIntArray()
-      val n = arr.length - 1
-      if (n <= 0) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-      val grams = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val g1 = arr(i) + 2048
-        val g2 = arr(i + 1) + 2048
-        require(g1 >= 0 && g1 < 4096 && g2 >= 0 && g2 < 4096,
-          s"token out of 12-bit domain [-2048, 2047] at $i")
-        grams(i) = g1 * 4096L + g2
-        i += 1
+    private def pairCodes(gs: Array[Int]): Array[Long] = {
+      val n = gs.length
+      val w = shape.window
+      if (w == 0) {
+        val codes = new Array[Long](math.max(n - 1, 0))
+        var i = 0
+        while (i < codes.length) { codes(i) = gs(i) * 4096L + gs(i + 1); i += 1 }
+        codes
+      } else {
+        var total = 0
+        var d = 1
+        while (d <= w) { total += math.max(n - d, 0); d += 1 }
+        val codes = new Array[Long](total)
+        var o = 0
+        d = 1
+        while (d <= w) {
+          var i = 0
+          while (i < n - d) {
+            codes(o) = (gs(i) * 4096L + gs(i + d)) * 4L + d
+            i += 1; o += 1
+          }
+          d += 1
+        }
+        codes
       }
-      java.util.Arrays.sort(grams)
-      // run-length encode the sorted grams: first count distinct runs
+    }
+    private def runLength(codes: Array[Long]): Array[Long] = {
+      val n = codes.length
+      if (n == 0) return codes
+      java.util.Arrays.sort(codes)
       var distinct = 1
-      i = 1
-      while (i < n) { if (grams(i) != grams(i - 1)) distinct += 1; i += 1 }
+      var i = 1
+      while (i < n) { if (codes(i) != codes(i - 1)) distinct += 1; i += 1 }
       val out = new Array[Long](distinct)
       var j = 0
       var runStart = 0
       i = 1
       while (i <= n) {
-        if (i == n || grams(i) != grams(runStart)) {
-          out(j) = (grams(runStart) << 40) | (i - runStart).toLong
+        if (i == n || codes(i) != codes(runStart)) {
+          out(j) = pack(codes(runStart), i - runStart)
           j += 1
           runStart = i
         }
         i += 1
       }
-      UnsafeArrayData.fromPrimitiveArray(out)
+      out
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(tokens = c(0))
+      copy(tokens = c(0), widthE = c(1), windowE = c(2))
   }
+
+  /** The shape [[GramCounts]] counts: width 1 (unigrams), width 2
+    * (adjacent bigrams), or width 2 with a skip `window` of 1..3. */
+  final case class GramShape(width: Int, window: Int = 0) {
+    require(width == 1 && window == 0 ||
+      width == 2 && window >= 0 && window <= 3,
+      s"gram shape must be width 1, width 2 or width 2 with a skip " +
+        s"window of 1..3, got width $width window $window")
+  }
+  object GramShape {
+    val Unigram: GramShape = GramShape(1)
+    val Bigram: GramShape = GramShape(2)
+    def skip(window: Int): GramShape = {
+      require(window >= 1, s"skip-gram window must be 1..3, got $window")
+      GramShape(2, window)
+    }
+  }
+
+  // The counted-gram layout `(code << 32) | n`: [[pack]] builds it, and
+  // [[gramOf]] / [[cntOf]] (and [[NbScoreKernel]]) are its only decoders.
+  private final val CountBits = 32
+  private final val CountMask = (1L << CountBits) - 1
+
+  def pack(gram: Long, n: Long): Long = (gram << CountBits) | n
+
+  private def gramOf(gc: Column): Column = F.shiftright(gc, CountBits)
+  private def cntOf(gc: Column): Column = gc.bitwiseAND(F.lit(CountMask))
+
+  /** The counted grams of `tokens` under `shape`, packed: a
+    * `graft_gram_counts` call. */
+  def gramCounts(tokens: Column, shape: GramShape): Column =
+    F.call_function("graft_gram_counts", tokens, F.lit(shape.width),
+      F.lit(shape.window))
+
+  /** One row per counted gram of the packed column `counted`:
+    * `(keep…, gram, n)`. A null or empty array gives no row. */
+  def explodeGramCounts(df: DataFrame, counted: Column,
+                        keep: Column*): DataFrame = {
+    val ex = df.select(keep :+ F.explode(counted).as("__gc"): _*)
+    ex.select(ex.columns.init.toSeq.map(ex.col) ++
+      Seq(gramOf(ex.col("__gc")).as("gram"), cntOf(ex.col("__gc")).as("n")): _*)
+  }
+
+  /** [[explodeGramCounts]] over the `tokens` column of `seqs`. */
+  def countedGrams(seqs: DataFrame, shape: GramShape,
+                   keep: Column*): DataFrame =
+    explodeGramCounts(seqs, gramCounts(F.col("tokens"), shape), keep: _*)
+
+  /** The corpus unigram histogram `(gram, c)`, gram = token + 2048. */
+  def corpusUnigrams(seqs: DataFrame): DataFrame =
+    countedGrams(seqs, GramShape.Unigram)
+      .groupBy(F.col("gram")).agg(F.sum(F.col("n")).as("c"))
 
   // ------------------------------------------------------------------
 
@@ -927,18 +865,10 @@ object expressions {
         s"codebook length ${arr.length} != m*ksub*dsub = ${m * ksub * dsub}")
       arr
     }
-    private def toDoubles(any: Any, dt: DataType): Array[Double] = {
-      val ad = any.asInstanceOf[ArrayData]
-      dt.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other => throw new IllegalArgumentException(s"pq_assign over $other")
-      }
-    }
     override def eval(input: InternalRow): Any = {
       val eAny = emb.eval(input)
       if (eAny == null) return null
-      val xs = toDoubles(eAny, emb.dataType)
+      val xs = doubles(eAny, emb.dataType, "graft_pq_assign")
       val out = new Array[Int](m)
       var s = 0
       while (s < m) {
@@ -1007,18 +937,10 @@ object expressions {
         s"centroid array length ${arr.length} != nCells*dim = ${cells.length * dim}")
       arr
     }
-    private def toDoubles(any: Any, dt: DataType): Array[Double] = {
-      val ad = any.asInstanceOf[ArrayData]
-      dt.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other => throw new IllegalArgumentException(s"ivf_assign over $other")
-      }
-    }
     override def eval(input: InternalRow): Any = {
       val eAny = emb.eval(input)
       if (eAny == null) return null
-      val ys = toDoubles(eAny, emb.dataType)
+      val ys = doubles(eAny, emb.dataType, "graft_ivf_assign")
       var best = 0
       var bestCos = Double.NegativeInfinity
       var c = 0
@@ -1176,7 +1098,7 @@ object expressions {
   /** graft_nb_score(gc ARRAY<BIGINT>, llk ARRAY<BIGINT>, priors
     * ARRAY<BIGINT>) → ARRAY<BIGINT> `[pred_idx, score_micro, margin_micro]`
     *
-    * Fused Naive Bayes scoring over the [[UnigramCounts]] packed per-doc
+    * Fused Naive Bayes scoring over the [[GramCounts]] unigram per-doc
     * histogram: `llk` is the LITERAL dense model — `llk(gram · S + s)` the
     * micro-nat log-likelihood of gram under source s (S = priors.length,
     * gram over the full 4096-slot domain) — and `priors` the per-source
@@ -1206,8 +1128,8 @@ object expressions {
       val scores = priors.clone()
       var i = 0
       while (i < gc.length) {
-        val base = (gc(i) >>> 40).toInt * nS
-        val c = gc(i) & 1099511627775L
+        val base = (gc(i) >>> CountBits).toInt * nS
+        val c = gc(i) & CountMask
         var s = 0
         while (s < nS) { scores(s) += c * llk(base + s); s += 1 }
         i += 1
@@ -2359,19 +2281,11 @@ object expressions {
     override def children: Seq[Expression] = Seq(a, b)
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = a.nullable || b.nullable
-    private def toDoubles(any: Any, dt: DataType): Array[Double] = {
-      val ad = any.asInstanceOf[ArrayData]
-      dt.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other => throw new IllegalArgumentException(s"cosine over $other")
-      }
-    }
     override def eval(input: InternalRow): Any = {
       val aAny = a.eval(input); val bAny = b.eval(input)
       if (aAny == null || bAny == null) return null
-      val xs = toDoubles(aAny, a.dataType)
-      val ys = toDoubles(bAny, b.dataType)
+      val xs = doubles(aAny, a.dataType, "graft_cosine")
+      val ys = doubles(bAny, b.dataType, "graft_cosine")
       val n = math.min(xs.length, ys.length)
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -2397,19 +2311,11 @@ object expressions {
     override def children: Seq[Expression] = Seq(a, b)
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = a.nullable || b.nullable
-    private def toDoubles(any: Any, dt: DataType): Array[Double] = {
-      val ad = any.asInstanceOf[ArrayData]
-      dt.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other => throw new IllegalArgumentException(s"dot over $other")
-      }
-    }
     override def eval(input: InternalRow): Any = {
       val aAny = a.eval(input); val bAny = b.eval(input)
       if (aAny == null || bAny == null) return null
-      val xs = toDoubles(aAny, a.dataType)
-      val ys = toDoubles(bAny, b.dataType)
+      val xs = doubles(aAny, a.dataType, "graft_dot")
+      val ys = doubles(bAny, b.dataType, "graft_dot")
       val n = math.min(xs.length, ys.length)
       var s = 0.0; var i = 0
       while (i < n) { s += xs(i) * ys(i); i += 1 }
@@ -2429,19 +2335,11 @@ object expressions {
     override def children: Seq[Expression] = Seq(a, b)
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = a.nullable || b.nullable
-    private def toDoubles(any: Any, dt: DataType): Array[Double] = {
-      val ad = any.asInstanceOf[ArrayData]
-      dt.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other => throw new IllegalArgumentException(s"l2 over $other")
-      }
-    }
     override def eval(input: InternalRow): Any = {
       val aAny = a.eval(input); val bAny = b.eval(input)
       if (aAny == null || bAny == null) return null
-      val xs = toDoubles(aAny, a.dataType)
-      val ys = toDoubles(bAny, b.dataType)
+      val xs = doubles(aAny, a.dataType, "graft_l2")
+      val ys = doubles(bAny, b.dataType, "graft_l2")
       val n = math.min(xs.length, ys.length)
       var s = 0.0; var i = 0
       while (i < n) { val d = xs(i) - ys(i); s += d * d; i += 1 }
@@ -2836,13 +2734,6 @@ object expressions {
     override def dataType: DataType =
       ArrayType(CoresetPickType, containsNull = false)
     override def nullable: Boolean = members.nullable
-    private def toDoubles(ad: ArrayData, et: DataType): Array[Double] =
-      et match {
-        case FloatType  => ad.toFloatArray().map(_.toDouble)
-        case DoubleType => ad.toDoubleArray()
-        case other =>
-          throw new IllegalArgumentException(s"coreset over $other")
-      }
     override def eval(input: InternalRow): Any = {
       val mAny = members.eval(input)
       if (mAny == null) return null
@@ -2851,14 +2742,13 @@ object expressions {
       val elemType = members.dataType.asInstanceOf[ArrayType]
         .elementType.asInstanceOf[StructType]
       val embType = elemType.fields(1).dataType
-        .asInstanceOf[ArrayType].elementType
       val ids = new Array[Long](m)
       val embs = new Array[Array[Double]](m)
       var i = 0
       while (i < m) {
         val row = arr.getStruct(i, 2)
         ids(i) = row.getLong(0)
-        embs(i) = toDoubles(row.getArray(1), embType)
+        embs(i) = doubles(row.getArray(1), embType, "graft_coreset_cell")
         i += 1
       }
       // sort members by vec_id: argmax tie-break + output determinism

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.{GramShape, countedGrams}
 
 /** Supervised feature selection: one-vs-rest chi-squared AND mutual
   * information over n-gram DOCUMENT frequencies, top-k grams per source —
@@ -49,10 +50,11 @@ import org.apache.spark.sql.functions._
   * corpora are filtered: chi2 is 0/0 and MI is 0 by construction.
   *
   * == Scale shape (100 TB) ==
-  * The per-doc DISTINCT grams come straight off the
-  * `graft_unigram_counts` histogram kernel (one 4096-slot pass per row —
-  * no doc-level distinct shuffle), so the ONLY corpus-sized exchange is
-  * the (source, gram) doc-frequency count with map-side partials.
+  * The per-doc DISTINCT grams come straight off the unigram histogram
+  * kernel [[graft.functions.expressions.GramCounts]] (one 4096-slot pass
+  * per row — no doc-level distinct shuffle), so the ONLY corpus-sized
+  * exchange is the (source, gram) doc-frequency count with map-side
+  * partials.
   * Everything downstream — gram marginals, per-source doc counts, the
   * score grid, the per-source top-k window — runs on the |S| x |vocab|
   * grid, bounded by the token alphabet, NOT the corpus. The doc-count
@@ -65,11 +67,7 @@ object FeatureSelect {
     * derived cells `b`, `c`, `dd` (= d). Zero-variance grams filtered. */
   private def presenceGrid(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val dg = seqs
-      .select(col("source"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("source"), e.gramOf(col("gc")).as("gram"))
+    val dg = countedGrams(seqs, GramShape.Unigram, col("source"))
     // the one corpus-sized exchange
     val a = dg.groupBy("source", "gram").agg(count(lit(1)).as("df_in"))
     val dfg = a.groupBy("gram").agg(sum(col("df_in")).as("df_all"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.{GramShape, corpusUnigrams, countedGrams}
 
 /** Corpus-level statistical language modeling for data curation: add-one
   * smoothed bigram cross-entropy scoring (the CCNet-style "perplexity
@@ -59,20 +60,6 @@ object LanguageModel {
     * [[bigramCounts]] there and join here). Low = predictable, fluent
     * under the corpus model; high = outlier (the filter threshold axis).
     * `n_bigrams` rides along so callers can re-weight. */
-  /** Per-doc distinct-bigram counts `(doc_id, gram, n_occ)` off the
-    * native [[graft.functions.expressions.BigramCounts]] kernel — the
-    * explode carries only each doc's DISTINCT bigrams (already counted),
-    * so no corpus-sized `(doc, gram)` hash-aggregate exchange ever runs
-    * (the [[graft.functions.expressions.UnigramCounts]] pattern). */
-  private def docBigramCounts(seqs: DataFrame): DataFrame = {
-    graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    seqs.select(col("doc_id"),
-        explode(expr("graft_bigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("n_occ"))
-  }
-
   /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP —
     * the [[graft.ops.NaiveBayes]] driver-math convention, oracle-pinned). */
   private def microNat(x: Double): Long =
@@ -121,14 +108,9 @@ object LanguageModel {
     // checkpoint + broadcast-join form (2.4 s) and the r5 corpus-window
     // form (3.4 s) — measured ~1.5 s at sf0.1, bitwise identical.
     graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val rows = seqs.select(lit(0).as("k"),
-        explode(expr("graft_bigram_counts(tokens)")).as("gc"))
-      .unionByName(seqs.select(lit(1).as("k"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc")))
-      .select(col("k"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("c"))
-      .groupBy(col("k"), col("gram")).agg(sum(col("c")).as("c12"))
+    val rows = countedGrams(seqs, GramShape.Bigram, lit(0).as("k"))
+      .unionByName(countedGrams(seqs, GramShape.Unigram, lit(1).as("k")))
+      .groupBy(col("k"), col("gram")).agg(sum(col("n")).as("c12"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val v = rows.count(_._1 == 1).toLong
     val model = rows.collect { case (0, g, c) => (g, c) }
@@ -205,8 +187,11 @@ object LanguageModel {
     // sf0.1, the r6-intermediate checkpoint + broadcast-join form
     // 2.8 s; this measures ~1.7 s, bitwise identical.)
     graft.functions.expressions.register(seqs.sparkSession)
-    val model = docBigramCounts(seqs)
-      .groupBy(col("gram")).agg(sum(col("n_occ")).as("c12"))
+    // per-doc distinct bigrams, counted in the row
+    // ([[graft.functions.expressions.GramCounts]]): no corpus-sized
+    // (doc, gram) aggregation runs before the model's
+    val model = countedGrams(seqs, GramShape.Bigram)
+      .groupBy(col("gram")).agg(sum(col("n")).as("c12"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val c1 = new Array[Long](4096)
     val n1w = new Array[Long](4096)
@@ -273,19 +258,15 @@ object LanguageModel {
     * of exact int64 products per distinct token. */
   def importanceWeights(seqs: DataFrame, targetPred: org.apache.spark.sql.Column): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    // per-doc distinct-gram counts from the native histogram kernel (the
-    // [[graft.functions.expressions.UnigramCounts]] packed form) — the
-    // target flag rides along so BOTH distributions come from this one
-    // pre-aggregated stream, and no corpus-sized (doc, gram) hash-agg runs
-    val dg = seqs
-      .select(col("doc_id"), targetPred.as("__t"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), col("__t"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"),
-        graft.functions.expressions.cntOf(col("gc")).as("n_occ"))
+    // per-doc distinct-gram counts from the native histogram kernel
+    // ([[graft.functions.expressions.GramCounts]]) — the target flag
+    // rides along so BOTH distributions come from this one pre-aggregated
+    // stream, and no corpus-sized (doc, gram) hash-agg runs
+    val dg = countedGrams(seqs, GramShape.Unigram,
+      col("doc_id"), targetPred.as("__t"))
     val cnt = dg.groupBy(col("gram")).agg(
-      sum(col("n_occ")).as("cr"),
-      sum(when(col("__t"), col("n_occ")).otherwise(lit(0L))).as("ct"))
+      sum(col("n")).as("cr"),
+      sum(when(col("__t"), col("n")).otherwise(lit(0L))).as("ct"))
     // nullif: an EMPTY target slice must yield NULL __nt (-> NULL weights,
     // the pre-rewrite and DuckDB-mirror semantics), not a finite ratio
     // against a zero-token target distribution
@@ -301,8 +282,8 @@ object LanguageModel {
           .as("lr_micro"))
     dg.join(broadcast(lr), Seq("gram"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("n_occ")).as("n_tok"),
-        sum(col("n_occ") * col("lr_micro")).as("__sum"))
+      .agg(sum(col("n")).as("n_tok"),
+        sum(col("n") * col("lr_micro")).as("__sum"))
       .select(col("doc_id"), col("n_tok"),
         (col("__sum").cast("double") /
           (col("n_tok") * lit(1000000L)).cast("double")).as("avg_llr"))
@@ -385,11 +366,8 @@ object LanguageModel {
     graft.functions.expressions.register(seqs.sparkSession)
     // per-doc gram counts from the native histogram kernel — explode
     // carries only distinct grams, no corpus-sized hash-aggregate
-    val dg = seqs.select(col("doc_id"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"),
-        graft.functions.expressions.cntOf(col("gc")).as("tf"))
+    val dg = countedGrams(seqs, GramShape.Unigram, col("doc_id"))
+      .withColumnRenamed("n", "tf")
     val df = dg.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val idf = df.crossJoin(broadcast(seqs.agg(count(lit(1)).as("__d"))))
       .select(col("gram"),
@@ -462,11 +440,9 @@ object LanguageModel {
     // previous form paid TWO corpus-wide window sorts (by token and by
     // doc) over the distinct (doc, token) table (5.9 s at sf0.1).
     graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val dg = seqs.select(col("doc_id"), size(col("tokens")).cast("long").as("n"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), col("n"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("c"))
+    val dg = countedGrams(seqs, GramShape.Unigram, col("doc_id"),
+        size(col("tokens")).cast("long").as("len"))
+      .select(col("doc_id"), col("len").as("n"), col("gram"), col("n").as("c"))
     // ≤4096 rows, materialized once for its two consumers (totals + the
     // broadcast join) so the corpus histogram pass runs a single time
     val cgT = dg.groupBy(col("gram")).agg(sum(col("c")).as("cg"))
@@ -556,18 +532,15 @@ object LanguageModel {
     * never a global sort materialization. */
   def pmiTop(seqs: DataFrame, k: Int, minCount: Long): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val uni = seqs
-      .select(explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .groupBy(graft.functions.expressions.gramOf(col("gc")).as("g"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c"))
+    val uni = corpusUnigrams(seqs)
     val n1 = uni.agg(sum(col("c")).as("__n1"))
     val bi = gramInstances(seqs, 2)
       .groupBy(col("gram")).agg(count(lit(1)).as("c_ab"))
     val n2 = bi.agg(sum(col("c_ab")).as("__n2"))
     bi.filter(col("c_ab") >= minCount)
-      .join(broadcast(uni.select(col("g").as("__g1"), col("c").as("c_a"))),
+      .join(broadcast(uni.select(col("gram").as("__g1"), col("c").as("c_a"))),
         expr("gram div 4096") === col("__g1"))
-      .join(broadcast(uni.select(col("g").as("__g2"), col("c").as("c_b"))),
+      .join(broadcast(uni.select(col("gram").as("__g2"), col("c").as("c_b"))),
         expr("gram % 4096") === col("__g2"))
       .crossJoin(broadcast(n1)).crossJoin(broadcast(n2))
       .select(
@@ -673,11 +646,9 @@ object LanguageModel {
     * which this exact form oracles). */
   def bm25Retrieve(seqs: DataFrame, queryMod: Int, k: Int): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val dg = seqs.select(col("doc_id"), col("n_tok"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), col("n_tok").cast("long").as("len"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"),
-        graft.functions.expressions.cntOf(col("gc")).as("tf"))
+    val dg = countedGrams(seqs, GramShape.Unigram,
+        col("doc_id"), col("n_tok").cast("long").as("len"))
+      .withColumnRenamed("n", "tf")
     val totals = seqs.agg(count(lit(1)).as("__n"),
       sum(col("n_tok").cast("long")).as("__t"))
     val idf = dg.groupBy(col("gram")).agg(count(lit(1)).as("df"))
@@ -888,10 +859,7 @@ object LanguageModel {
     * realistic corpus (10¹⁵-count hot token → w ≈ 6·10¹¹). */
   def negSampleTable(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val counts = seqs
-      .select(explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .groupBy(graft.functions.expressions.gramOf(col("gc")).as("gram"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c"))
+    val counts = corpusUnigrams(seqs)
     def cand(r: String) =
       s"""(CAST(greatest($r, 0L) AS DECIMAL(38,0))
          | * CAST(greatest($r, 0L) AS DECIMAL(38,0))
@@ -992,13 +960,8 @@ object LanguageModel {
     * two re-references). */
   def sourceDrift(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val sg = seqs
-      .select(col("source"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("source"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("n_occ"))
-      .groupBy("source", "gram").agg(sum(col("n_occ")).as("c"))
+    val sg = countedGrams(seqs, GramShape.Unigram, col("source"))
+      .groupBy("source", "gram").agg(sum(col("n")).as("c"))
     val g = sg.groupBy("gram").agg(sum(col("c")).as("cg"))
     val np = sg.groupBy("source").agg(sum(col("c")).as("np"))
     val n = g.agg(sum(col("cg")).as("n"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.expressions.{GramShape, countedGrams,
+  explodeGramCounts, gramCounts, pack}
 
 import scala.jdk.CollectionConverters._
 
@@ -56,19 +58,6 @@ import scala.jdk.CollectionConverters._
   */
 object NaiveBayes {
 
-  /** The corpus-sized per-doc gram counts scoring reads: `(doc_id, source,
-    * gram, n_occ)` — computed by the native per-row histogram kernel
-    * ([[graft.functions.expressions.UnigramCounts]]), so NO corpus-sized
-    * hash-aggregate runs and the explode carries only each doc's DISTINCT
-    * grams; `source` rides along (functionally dependent on `doc_id`) so
-    * the label needs no second join. */
-  private def docGramCounts(seqs: DataFrame): DataFrame =
-    seqs.select(col("doc_id"), col("source"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), col("source"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"),
-        graft.functions.expressions.cntOf(col("gc")).as("n_occ"))
-
   /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP). */
   private def microNat(x: Double): Long =
     java.math.BigDecimal.valueOf(x * 1000000)
@@ -84,12 +73,12 @@ object NaiveBayes {
     // per-source sum IS the doc count the priors need, and the former
     // second counting job disappears
     val DocMarker = 4096L
-    val rows = seqs.select(col("source"),
-        explode(expr(
-          s"concat(coalesce(graft_unigram_counts(tokens), array()), array(CAST(${(DocMarker << 40) | 1L} AS BIGINT)))")).as("gc"))
-      .groupBy(col("source"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c_ts"))
+    val counted = concat(
+      coalesce(gramCounts(col("tokens"), GramShape.Unigram),
+        typedlit(Seq.empty[Long])),
+      array(lit(pack(DocMarker, 1L))))
+    val rows = explodeGramCounts(seqs, counted, col("source"))
+      .groupBy(col("source"), col("gram")).agg(sum(col("n")).as("c_ts"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
     val cts = rows.filter(_._1._2 != DocMarker).toMap
     val ds = rows.collect { case ((s, DocMarker), c) => s -> c }.toMap
@@ -153,7 +142,7 @@ object NaiveBayes {
     * the dense model rides the plan as two literal arrays (4096·S + S
     * int64s — model-sized, the [[TreeEnsemble.scoreLarge]] node-table
     * pattern) and each document scores in ONE in-row multiply-add sweep
-    * over its [[graft.functions.expressions.UnigramCounts]] histogram —
+    * over its [[graft.functions.expressions.GramCounts]] histogram —
     * zero explode, zero join, zero exchange after the scan. Measured vs
     * the relational form ([[trainAndClassifyRelational]], kept as the
     * pinned-equal A/B): sf0.1 local[32] train+score 4.3–6.0 s relational
@@ -206,7 +195,7 @@ object NaiveBayes {
     seqs.select(col("doc_id"), col("source").as("label"),
         explode(array_compact(array(when(size(col("tokens")) > 0,
           call_function("graft_nb_score",
-            expr("graft_unigram_counts(tokens)"),
+            gramCounts(col("tokens"), GramShape.Unigram),
             typedlit(llkFlat), typedlit(priorsArr)))))).as("__r"))
       .select(col("doc_id"), col("label"),
         element_at(typedlit(sources), col("__r")(0).cast("int") + 1)
@@ -229,10 +218,13 @@ object NaiveBayes {
     val p = spark.createDataFrame(
       new java.util.ArrayList[Row](priorRows.asJava), PriorSchema)
       .withColumnRenamed("source", "pred")
-    val scores = docGramCounts(seqs)
+    // per-doc distinct grams, counted in the row; `source` rides along
+    // (functionally dependent on `doc_id`), so the label needs no join
+    val scores = countedGrams(seqs, GramShape.Unigram,
+        col("doc_id"), col("source"))
       .join(broadcast(m), Seq("gram"))
       .groupBy(col("doc_id"), col("source"), col("pred"))
-      .agg(sum(col("n_occ") * col("llk_micro")).as("__ll"))
+      .agg(sum(col("n") * col("llk_micro")).as("__ll"))
       .join(broadcast(p), Seq("pred"))
       .select(col("doc_id"), col("source").as("label"), col("pred"),
         (col("__ll") + col("prior_micro")).as("score_micro"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.{GramShape, corpusUnigrams, countedGrams}
 
 /** Mergeable sketch operators — the sublinear-state summaries a 100 TB
   * corpus pipeline runs where exact state would not fit: count-min
@@ -42,21 +43,18 @@ object Sketches {
     * error; production keeps the grid alone. */
   def countMinReport(seqs: DataFrame, depth: Int, width: Int): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val uni = seqs
-      .select(explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .groupBy(graft.functions.expressions.gramOf(col("gc")).as("g"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c"))
+    val uni = corpusUnigrams(seqs)
     // every (row, cell) coordinate of every gram — vocab × depth rows
-    val gh = uni.select(col("g"), col("c"),
+    val gh = uni.select(col("gram"), col("c"),
       posexplode(array((0 until depth).map(r =>
-        Sampling.md5Slot(concat(lit(s"cms$r:"), col("g").cast("string")),
+        Sampling.md5Slot(concat(lit(s"cms$r:"), col("gram").cast("string")),
           width)): _*)).as(Seq("r", "cell")))
     val grid = gh.groupBy(col("r"), col("cell"))
       .agg(sum(col("c")).as("cell_sum"))
     gh.join(grid, Seq("r", "cell"))
-      .groupBy(col("g"))
+      .groupBy(col("gram"))
       .agg(min(col("cell_sum")).as("c_est"), min(col("c")).as("c_exact"))
-      .select((col("g") - 2048).cast("int").as("gram"),
+      .select((col("gram") - 2048).cast("int").as("gram"),
         col("c_exact"), col("c_est"),
         (col("c_est") - col("c_exact")).as("overest"))
   }
@@ -734,9 +732,10 @@ object Sketches {
     *
     * == Scale shape ==
     * Pair generation is a NARROW per-row pass over the token array by the
-    * native [[graft.functions.expressions.SkipGrams]] kernel (packed into
-    * one int64 per instance — the `(t+2048)`-gram convention — so the
-    * shuffle carries 8-byte keys, no structs); counting is one hash
+    * native [[graft.functions.expressions.GramCounts]] kernel (one int64
+    * code per distinct pair of the doc, counted in the row — the
+    * `(t+2048)`-gram convention — so the shuffle carries 8-byte keys, no
+    * structs); counting is one hash
     * exchange with map-side partials over a key space bounded by
     * `vocab² × window`, and top-k is `orderBy(...).limit` = distributed
     * take-ordered, never a global sort. */
@@ -745,11 +744,8 @@ object Sketches {
     // r6: per-doc COUNTED codes off the native sort+RLE kernel — the
     // global count aggregation and its exchange see each doc's distinct
     // codes once (~2.4× fewer rows) instead of every instance
-    val inst = seqs.select(
-        explode(expr(s"graft_skipgram_counts(tokens, $window)")).as("gc"))
-      .select(shiftrightunsigned(col("gc"), 32).as("code"),
-        col("gc").bitwiseAND(lit(0xFFFFFFFFL)).as("n"))
-    inst.groupBy(col("code")).agg(sum(col("n")).as("c"))
+    countedGrams(seqs, GramShape.skip(window))
+      .groupBy(col("gram").as("code")).agg(sum(col("n")).as("c"))
       .select(
         expr("CAST(code div 4 div 4096 - 2048 AS INT)").as("t1"),
         expr("CAST(code div 4 % 4096 - 2048 AS INT)").as("t2"),

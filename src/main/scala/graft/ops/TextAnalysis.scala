@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.{GramShape, countedGrams}
 
 /** Text-analysis operators for training-data curation over the `documents`
   * table: token counting, quality scoring, language-ID heuristic, document
@@ -307,7 +308,7 @@ object TextAnalysis {
     * The naive form (a distinct count per prefix) rescans the corpus per
     * checkpoint; this one reduces each gram to its FIRST-APPEARANCE doc id
     * (one `groupBy(gram).min` shuffle over the per-doc distinct grams from
-    * the [[graft.functions.expressions.UnigramCounts]] histogram kernel —
+    * the [[graft.functions.expressions.GramCounts]] histogram kernel —
     * vocab-bounded output), then every checkpoint's vocabulary is a
     * conditional count over that vocab-sized table against a broadcast
     * checkpoint list. Doc/token volumes fan the scan out `nCkpts`-fold
@@ -323,12 +324,8 @@ object TextAnalysis {
       .select(col("i").cast("int").as("ckpt"),
         expr(s"""concat('d', lpad(CAST(lo_n + (hi_n - lo_n) * i div $nCkpts
                 |  AS STRING), 6, '0'))""".stripMargin).as("thr"))
-    val firstSeen = seqs
-      .select(col("doc_id"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"),
-        graft.functions.expressions.gramOf(col("gc")).as("g"))
-      .groupBy(col("g")).agg(min(col("doc_id")).as("first_seen"))
+    val firstSeen = countedGrams(seqs, GramShape.Unigram, col("doc_id"))
+      .groupBy(col("gram")).agg(min(col("doc_id")).as("first_seen"))
     val vocab = firstSeen.join(broadcast(ckpts),
         col("first_seen") <= col("thr"))
       .groupBy(col("ckpt"), col("thr")).agg(count(lit(1)).as("vocab"))
@@ -433,14 +430,10 @@ object TextAnalysis {
     * exact ints, micro-quantized — bitwise across engines. */
   def vocabRichness(seqs: DataFrame): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val counts = seqs.select(col("source"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("source"),
-        graft.functions.expressions.gramOf(col("gc")).as("g"),
-        graft.functions.expressions.cntOf(col("gc")).as("c"))
-      .groupBy(col("source"), col("g")).agg(sum(col("c")).as("c"))
-    val global = counts.groupBy(col("g")).agg(sum(col("c")).as("c"))
-      .select(lit("__all__").as("source"), col("g"), col("c"))
+    val counts = countedGrams(seqs, GramShape.Unigram, col("source"))
+      .groupBy(col("source"), col("gram")).agg(sum(col("n")).as("c"))
+    val global = counts.groupBy(col("gram")).agg(sum(col("c")).as("c"))
+      .select(lit("__all__").as("source"), col("gram"), col("c"))
     counts.unionByName(global)
       .groupBy(col("source"))
       .agg(sum(col("c")).as("n_tokens"),

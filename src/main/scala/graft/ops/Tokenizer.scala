@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.corpusUnigrams
 
 /** Distributed BPE tokenizer training: iterative adjacent-pair counting +
   * greedy merge over the pre-tokenized corpus.
@@ -305,10 +306,7 @@ object Tokenizer {
     * token arrays pinned bitwise by the oracle. */
   def unkRemap(seqs: DataFrame, minCount: Long, unk: Int): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    val rare = seqs
-      .select(explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .groupBy(graft.functions.expressions.gramOf(col("gc")).as("gram"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c"))
+    val rare = corpusUnigrams(seqs)
       .filter(col("c") < minCount)
       .select((col("gram") - 2048).cast("int").as("t"))
       .collect().map(_.getInt(0)).sorted
@@ -563,25 +561,22 @@ object Tokenizer {
     val tw = seqs.select(expr(s"slice(tokens, 1, $w)").as("wtoks"))
     // BOTH count families in ONE job: bigram codes ride the same explode
     // tagged by +2^25 (above the 24-bit bigram identity range, so no
-    // collision with unigram codes), the per-family top-b cut is a rank
-    // window over the two tag partitions, and the single collect returns
-    // every unigram code plus the top-b bigrams — the same rows the two
-    // separate aggregation jobs produced
+    // collision with unigram codes), and one take-ordered collect returns
+    // every unigram code (at most 4096, ordered first) followed by the
+    // bigrams by (count desc, code asc), of which the first b are kept —
+    // no window sends the bigram census through one partition
     val tag = 1L << 25
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("code") >= tag)
-      .orderBy(col("c").desc, col("code").asc)
     val rows = tw.select(explode(concat(
         expr("graft_pack_ngrams(wtoks, 1)"),
         expr(s"transform(graft_pack_ngrams(wtoks, 2), c -> c + $tag)")))
         .as("code"))
       .groupBy(col("code")).agg(count(lit(1)).as("c"))
-      .withColumn("r", row_number().over(wk))
-      .filter(col("code") < tag || col("r") <= b)
-      .select(col("code"), col("c"))
+      .orderBy((col("code") >= tag).asc, col("c").desc, col("code").asc)
+      .limit(4096 + b)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val u1 = rows.filter(_._1 < tag)
-    val b2 = rows.filter(_._1 >= tag).map(p => (p._1 - tag, p._2))
+    require(u1.length <= 4096, "unigram codes beyond the 12-bit token domain")
+    val b2 = rows.filter(_._1 >= tag).take(b).map(p => (p._1 - tag, p._2))
     val total0 = u1.map(_._2).sum + b2.map(_._2).sum
     def score(c: Long): Long =
       java.math.BigDecimal.valueOf(

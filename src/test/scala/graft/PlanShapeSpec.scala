@@ -1,12 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
   ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
-  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{Exchange,
+  REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Per-query plan shape, checked on the executed (adaptive) plan. The
@@ -67,6 +67,25 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     test(s"$q: the scoring pass synthesizes tokens once") {
       val plan = executed(q)
       assert(tokenGens(plan) == 1, s"\n$plan")
+    }
+
+  // large enough that the bm25 query slice (one doc in 50 of the dedup
+  // subsample) is not empty
+  private lazy val wideCorpus =
+    documents((1L to 600L).map(i => (Some(i), 1 + i * 37 % 100, s"s${i % 3}")))
+
+  // Exchange (shuffle + broadcast) and Generate nodes summed over every
+  // execution a query runs, model collects included; the counting kernels
+  // must not add a shuffle or an explode
+  for ((q, exchanges, generates) <- Seq(("kn_bigram_nll", 3, 2),
+      ("nb_classify", 3, 2), ("skipgram_top", 2, 1), ("bm25_top", 12, 3)))
+    test(s"$q: pinned exchange and generate counts") {
+      val plans = SparkTestSession.executionsDuring(
+        SparkEntry.queries(q)(spark, wideCorpus).collect())
+      val ex = plans.map(p => collect(p) { case e: Exchange => e }.size)
+      val gen = plans.map(p => collect(p) { case g: GenerateExec => g }.size)
+      assert((ex.sum, gen.sum) == (exchanges, generates),
+        s"\n${plans.mkString("\n")}")
     }
 
   test("in-row onset queries keep the frame-row row set") {

@@ -153,6 +153,50 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("counted-gram kernel == Scala census, every shape") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.expressions.{GramShape, countedGrams, gramCounts}
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val rnd = new Random(4099)
+    // every length 0..3 over a 3-token alphabet, then random arrays drawn
+    // from a few tokens (repeats) that include both ends of the domain
+    val short = (0 to 3).flatMap(n => Seq.fill(4)(Seq.fill(n)(rnd.nextInt(3) - 1)))
+    val random = Seq.fill(Trials) {
+      val alpha = Seq(-2048, 2047) ++ Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(4096) - 2048)
+      Seq.fill(rnd.nextInt(60))(alpha(rnd.nextInt(alpha.length)))
+    }
+    val cases = (short ++ random).map(Option(_)) :+ None // a null array
+    val df = cases.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "tokens")
+    def codes(ts: Seq[Int], shape: GramShape): Seq[Long] = {
+      val g = ts.map(_ + 2048L)
+      if (shape.width == 1) g
+      else if (shape.window == 0) g.indices.drop(1).map(i => g(i - 1) * 4096 + g(i))
+      else for (d <- 1 to shape.window; i <- 0 until g.length - d)
+        yield (g(i) * 4096 + g(i + d)) * 4 + d
+    }
+    val shapes = Seq(GramShape.Unigram, GramShape.Bigram) ++ (1 to 3).map(GramShape.skip)
+    for (shape <- shapes) {
+      val got = countedGrams(df, shape, col("id")).as[(Int, Long, Long)].collect()
+        .groupBy(_._1).map { case (i, rs) => i -> rs.map(r => r._2 -> r._3).toMap }
+      val census = cases.zipWithIndex.collect { case (Some(ts), i) if ts.length >= shape.width =>
+        i -> codes(ts, shape).groupBy(identity).map { case (c, xs) => c -> xs.length.toLong }
+      }.toMap
+      assert(got == census, shape)
+      // packed in ascending code order; a null array stays null
+      val packed = df.select(gramCounts(col("tokens"), shape)).as[Option[Seq[Long]]]
+        .collect()
+      assert(packed.last.isEmpty, shape)
+      packed.flatten.foreach(p => assert(p == p.distinct.sorted, shape))
+      for (bad <- Seq(Seq(0, 2048), Seq(-2049, 5))) {
+        val e = intercept[Exception](Seq(bad).toDF("tokens")
+          .select(gramCounts(col("tokens"), shape)).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.getMessage.contains("token out of 12-bit domain")), s"$shape $bad")
+      }
+    }
+  }
+
   test("viterbi segmentation kernel == scalar DP reference (random models)") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData

@@ -311,8 +311,11 @@ class SketchSpec extends AnyFunSuite {
     graft.functions.expressions.register(spark)
     val toks = Seq.tabulate(700)(i => (i * i * 31 + i * 7) % 4093 - 2046)
     val df = toySeqs("a" -> toks)
-    val native = df.select(expr("graft_skipgrams(tokens, 3)").as("c"))
-      .collect()(0).getSeq[Long](0).sorted
+    // the counted kernel's codes, each expanded n times: the instance codes
+    val native = graft.functions.expressions.countedGrams(df,
+        graft.functions.expressions.GramShape.skip(3))
+      .as[(Long, Long)].collect()
+      .flatMap { case (code, n) => Seq.fill(n.toInt)(code) }.toSeq.sorted
     val hof = df.select(expr(
       """flatten(transform(sequence(1, 3), d ->
         |  transform(sequence(1, size(tokens) - d), i ->

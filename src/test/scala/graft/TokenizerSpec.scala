@@ -178,6 +178,35 @@ class TokenizerSpec extends AnyFunSuite {
       1L * (7L + 2048L) + 2L * c77)))
   }
 
+  test("unigram model: one counting exchange, no window; top-b bigrams == Scala ranking") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val rnd = new scala.util.Random(17)
+    val docs = (0 until 30).map(i =>
+      (s"d$i", Seq.fill(5 + rnd.nextInt(40))(rnd.nextInt(9) - 4)))
+    val seqs = docs.map { case (d, t) => (d, t, t.length, "s") }
+      .toDF("doc_id", "tokens", "n_tok", "source")
+    val (w, b) = (32, 7)
+    var model: org.apache.spark.sql.Row = null
+    val plans = SparkTestSession.executionsDuring {
+      model = Tokenizer.unigramModel(seqs, w, b).collect()(0)
+    }
+    val h = new AdaptiveSparkPlanHelper {}
+    val counting = plans.filter(p => h.collect(p) { case e: ShuffleExchangeExec => e }.nonEmpty)
+    assert(counting.size == 1, plans.mkString("\n"))
+    assert(h.collect(counting.head) { case e: ShuffleExchangeExec => e }.size == 1)
+    assert(plans.forall(p => h.collect(p) { case x: WindowExec => x }.isEmpty),
+      plans.mkString("\n"))
+    val win = docs.map(_._2.take(w).map(_ + 2048L))
+    val uni = win.flatten.distinct.sorted
+    val bi = win.flatMap(g => g.indices.drop(1).map(i => g(i - 1) * 4096 + g(i)))
+      .groupBy(identity).map { case (c, xs) => (c, xs.length) }.toSeq
+      .sortBy { case (c, n) => (-n, c) }.take(b).map(_._1).sorted
+    assert(model.getSeq[Long](0) == uni)
+    assert(model.getSeq[Long](2) == bi)
+  }
+
   test("unigram: M-step census re-estimates from segmentation usage; partition-invariant") {
     val seqs = Seq(
       ("a", Seq(5, 6, 5, 6, 5, 6), 6, "s"),
