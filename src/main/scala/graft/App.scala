@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.features.{FeaturesHl, Pipeline}
-import graft.sink.KeyedSink
+import graft.sink.{CommitStats, KeyedSink}
 import graft.sources.Seqs
 
 /** Production driver CLI — the spark-submit entry mirroring AFEC's Crawler
@@ -46,25 +45,36 @@ object App {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val seqs = Seqs.fromDocuments(spark, input)
+    run(spark, Seqs.fromDocuments(spark, input), out, level, incremental) match {
+      case None => println(s"""{"event":"up-to-date","sink":"$out"}""")
+      case Some(stats) =>
+        println(s"""{"event":"committed","snapshot":${stats.snapshot},""" +
+          s""""rows":${stats.totalRows},"upserted":${stats.upsertedRows},""" +
+          s""""level":"$level","incremental":$incremental}""")
+    }
+    spark.stop()
+  }
+
+  /** One run over `seqs` into the sink at `out`; None when an incremental
+    * run finds nothing to do. A full run rewrites the table (copy-on-write
+    * [[KeyedSink.upsert]]); an incremental run recomputes only the pending
+    * docs and commits them as a delta snapshot ([[KeyedSink.upsertDelta]]),
+    * writing only their rows. */
+  def run(spark: SparkSession, seqs: DataFrame, out: String, level: String,
+          incremental: Boolean): Option[CommitStats] = {
     // change-list: skip up-to-date entities (version = n_tok here; a real
     // deployment uses the source's modtime/snapshot-id column)
     val todo =
       if (incremental) KeyedSink.pending(spark, out, seqs, "doc_id", "n_tok")
       else seqs
-    val nTodo = todo.count()
-    if (nTodo == 0) {
-      println(s"""{"event":"up-to-date","sink":"$out"}""")
-    } else {
+    if (todo.isEmpty) None
+    else {
       val ll = Pipeline.featuresLl(todo)
-      // HL derives from LL (second projection, SampleDescriptors.cpp:206-237);
-      // n_tok doubles as the version column for the change-list
+      // HL derives from LL (second projection, SampleDescriptors.cpp:206-237)
       val features = if (level == "high") FeaturesHl.featuresHl(ll) else ll
-      val stats = KeyedSink.upsert(spark, out, features, "doc_id")
-      println(s"""{"event":"committed","snapshot":${stats.snapshot},""" +
-        s""""rows":${stats.totalRows},"upserted":${stats.upsertedRows},""" +
-        s""""level":"$level","incremental":$incremental}""")
+      Some(
+        if (incremental) KeyedSink.upsertDelta(spark, out, features, "doc_id")
+        else KeyedSink.upsert(spark, out, features, "doc_id"))
     }
-    spark.stop()
   }
 }

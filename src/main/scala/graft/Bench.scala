@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 /** Benchmark main. Prints ONE JSON line:
   * `{"metric":"…","value":<total sec>,"unit":"sec","queries":{name:sec,…},
   *   "sf":…, "fv_rows":N, "fv_rows_per_sec":R, "cpus":C}`.
@@ -162,7 +164,7 @@ object Bench {
     }
     // hoist the doc count BEFORE the timed reps (it reads the source
     // parquet; doing it between timings perturbed the environment)
-    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count() * scale
+    val nDocs = readTable(spark, sfDir, "documents").count() * scale
     timeScaled() // warm
     val nReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val llReps = Seq.fill(nReps)(timeScaled())

@@ -1,7 +1,14 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Partitioning utilities — the explicit partition/shuffle/skew decisions
   * the north rule calls out.
@@ -38,7 +45,46 @@ object Partitioning {
   /** Balanced parquet read of one testdata table. */
   def readBalanced(spark: SparkSession, dir: String, table: String,
                    key: String): DataFrame =
-    balance(spark.read.parquet(s"$dir/$table.parquet"), key)
+    balance(readTable(spark, dir, table), key)
+
+  /** `dir/table.parquet` read with [[footerSchema]]: building the frame
+    * starts no Spark job (parquet schema inference is one job per read). */
+  def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers with `mergeSchema` off,
+    * read on the driver from the one footer inference reads: the file at
+    * `path`, or the first data file of a flat directory in path order
+    * (names starting `_` or `.` skipped). It is converted as inference
+    * converts it: Spark's row-metadata key if present, else
+    * `ParquetToSparkSchemaConverter`. None where inference reads more
+    * than one footer or adds partition columns: a directory with a
+    * `_common_metadata` summary or with subdirectories. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val top = fs.getFileStatus(root)
+    val file =
+      if (!top.isDirectory) Some(top)
+      else {
+        val entries = fs.listStatus(root)
+        if (entries.exists(e => e.isDirectory ||
+            e.getPath.getName == "_common_metadata")) None
+        else entries.filter { e =>
+          val n = e.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+        }.sortBy(_.getPath.toString).headOption
+      }
+    file.map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** Salt expression: `pmod(hash(saltCol), buckets)`. */
   def saltKey(saltCol: String, buckets: Int) =

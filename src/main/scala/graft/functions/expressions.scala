@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData}
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the per-token hot loops.
   *
@@ -97,21 +99,10 @@ object expressions {
     reg.createOrReplaceTempFunction("graft_gram_counts",
       es => GramCounts(es(0), es(1),
         if (es.length > 2) es(2) else Literal(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_assign",
-      es => PqAssignKernel(es(0), es(1), es(2), es(3), es(4)), "built-in")
-    reg.createOrReplaceTempFunction("graft_ivf_assign",
-      es => IvfAssignKernel(es(0), es(1), es(2), es(3)), "built-in")
     reg.createOrReplaceTempFunction("graft_ngram_hashes",
       es => NgramHashes(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bigram_nll",
-      es => BigramNllScore(es(0), BigramNllSlots.get(litInt(es(1)))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_nb_score",
-      es => NbScoreKernel(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_remap_tokens",
       es => RemapTokens(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_viterbi_seg",
-      es => ViterbiSeg(es(0), es(1), es(2), es(3), es(4)), "built-in")
     reg.createOrReplaceTempFunction("graft_bpe_apply",
       es => BpeApplyMerges(es(0), es(1), es(2), es(3)), "built-in")
     reg.createOrReplaceTempFunction("graft_span_hashes",
@@ -167,7 +158,7 @@ object expressions {
   /** An `ARRAY<FLOAT|DOUBLE>` value (`dt` its array type) as doubles;
     * floats widen exactly. Any other element type raises an error naming
     * the calling function `fn`. */
-  private def doubles(any: Any, dt: DataType, fn: String): Array[Double] = {
+  private[graft] def doubles(any: Any, dt: DataType, fn: String): Array[Double] = {
     val ad = any.asInstanceOf[ArrayData]
     dt.asInstanceOf[ArrayType].elementType match {
       case FloatType  => ad.toFloatArray().map(_.toDouble)
@@ -233,7 +224,9 @@ object expressions {
     * that builds gram STRINGS is ~1000× slower there — measured 580 s vs
     * 0.6 s on the gate corpus). Larger alphabets or longer grams overflow
     * the injective range: switch to `xxhash64` banding there (the
-    * [[graft.ops.Dedup]] MinHash path) and accept collision-rate ε.
+    * [[graft.ops.Dedup]] MinHash path) and accept collision-rate ε. A
+    * token outside [-2048, 2047] raises `token out of 12-bit domain`
+    * (the [[GramCounts]] error): packed, it would alias another gram.
     * One tight pass per row, primitive array out — no boxing. */
   case class PackNgrams(tokens: Expression, kE: Expression)
       extends Expression with CodegenFallback {
@@ -252,6 +245,12 @@ object expressions {
       val tAny = tokens.eval(input)
       if (tAny == null) return null
       val arr = tAny.asInstanceOf[ArrayData].toIntArray()
+      var t = 0
+      while (t < arr.length) {
+        require(arr(t) >= -2048 && arr(t) < 2048,
+          s"token out of 12-bit domain [-2048, 2047]: ${arr(t)}")
+        t += 1
+      }
       val n = arr.length - k + 1
       if (n <= 0) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
       val out = new Array[Long](n)
@@ -751,37 +750,8 @@ object expressions {
 
   // ------------------------------------------------------------------
 
-  /** Driver-side registry handing per-query bigram-NLL model broadcasts
-    * to [[BigramNllScore]] (the registered-function builder can only
-    * receive child EXPRESSIONS, so the broadcast travels by slot id: the
-    * caller registers the broadcast, passes the id as a literal, and the
-    * builder — which runs at analysis time ON THE DRIVER — captures the
-    * broadcast into the expression instance, whence it serializes to
-    * executors as a normal torrent-broadcast handle). The registry keeps
-    * only the last few entries; evicted broadcasts become unreachable
-    * once their query plans are GC'd and Spark's ContextCleaner reclaims
-    * them. */
-  object BigramNllSlots {
-    private val slots =
-      new java.util.concurrent.ConcurrentHashMap[Int,
-        org.apache.spark.broadcast.Broadcast[Array[Int]]]()
-    private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val Keep = 8
-    def put(bc: org.apache.spark.broadcast.Broadcast[Array[Int]]): Int = {
-      val id = nextId.incrementAndGet()
-      slots.put(id, bc)
-      slots.keySet.removeIf(k => k <= id - Keep)
-      id
-    }
-    def get(id: Int): org.apache.spark.broadcast.Broadcast[Array[Int]] = {
-      val bc = slots.get(id)
-      require(bc != null, s"bigram-nll model slot $id expired")
-      bc
-    }
-  }
-
-  /** graft_bigram_nll(tokens ARRAY<INT>, slot INT) → ARRAY<BIGINT>
-    * `[n_bigrams, sum_micro]`
+  /** BigramNllScore(tokens ARRAY<INT>) → ARRAY<BIGINT>
+    * `[n_bigrams, sum_micro]`, model by reference
     *
     * Fused self-scored bigram-LM document scoring: one pass over the
     * token array accumulating `Σ nll_micro[gram]` over every bigram
@@ -791,14 +761,13 @@ object expressions {
     * with zero explode, zero join and zero aggregation exchange. The
     * model is the DENSE alphabet-bounded table `nll[gram]` over the
     * 16.7M-slot 24-bit gram domain (67 MB of ints — bounded by the token
-    * alphabet at ANY corpus size), distributed as a real Spark broadcast
-    * via [[BigramNllSlots]]. PRECONDITION (self-scoring contract): every
+    * alphabet at ANY corpus size), held as a Spark broadcast field and
+    * built through [[models.kernel]]. PRECONDITION (self-scoring contract): every
     * scored bigram must exist in the model — absent slots hold
     * Int.MinValue and trip the require below. Returns null for rows with
     * fewer than 2 tokens (no bigrams — such docs are absent from the
     * relational form's output too). */
-  case class BigramNllScore(tokens: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Int]])
+  case class BigramNllScore(tokens: Expression, bc: Broadcast[Array[Int]])
       extends Expression with CodegenFallback {
     override def children: Seq[Expression] = Seq(tokens)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -833,42 +802,39 @@ object expressions {
 
   // ------------------------------------------------------------------
 
-  /** graft_pq_assign(embedding ARRAY<FLOAT|DOUBLE>, cb ARRAY<DOUBLE>,
-    * m INT, dsub INT, ksub INT) → ARRAY<INT>
+  /** A trained PQ codebook for [[PqAssignKernel]]: `m` subspaces of
+    * `dsub` dims, `ksub` codewords each, flattened as
+    * `cb[(s·ksub + c)·dsub + p]`. */
+  final case class PqModel(cb: Array[Double], m: Int, dsub: Int, ksub: Int) {
+    require(cb.length == m * ksub * dsub,
+      s"codebook length ${cb.length} != m*ksub*dsub = ${m * ksub * dsub}")
+  }
+
+  /** PqAssignKernel(embedding ARRAY<FLOAT|DOUBLE>) → ARRAY<INT>, the
+    * [[PqModel]] by reference (a broadcast field, built through
+    * [[models.kernel]])
     *
     * Fused PQ nearest-codeword assignment: for every subspace
     * `s ∈ [0, m)` return the code of the min-L2 codeword (ties → lowest
-    * code — codes are scanned ascending with a strict `<`). `cb` is the
-    * LITERAL flattened codebook `cb[(s·ksub + c)·dsub + p]` (m·ksub·dsub
-    * doubles — model-sized, decoded once per expression instance, the
-    * [[TreeWalk]] pattern). The L2 fold replicates [[L2Sq]] exactly
-    * (per-element float→double cast, sequential `s += d·d` over
-    * `min(dsub, len − s·dsub)` positions), so the codes are bitwise
-    * identical to the relational explode → broadcast-join → window-argmin
-    * form this kernel replaces ([[graft.ops.Similarity]] PQ family) —
-    * while running as ONE narrow projection of the corpus scan: no
-    * subvector explode, no join, no per-(vec, sub) window sort. */
-  case class PqAssignKernel(emb: Expression, cbE: Expression,
-      mE: Expression, dsubE: Expression, ksubE: Expression)
+    * code — codes are scanned ascending with a strict `<`). The L2 fold
+    * replicates [[L2Sq]] exactly (per-element float→double cast,
+    * sequential `s += d·d` over `min(dsub, len − s·dsub)` positions), so
+    * the codes are bitwise identical to the relational explode →
+    * broadcast-join → window-argmin form this kernel replaces
+    * ([[graft.ops.Similarity]] PQ family) — while running as ONE narrow
+    * projection of the corpus scan: no subvector explode, no join, no
+    * per-(vec, sub) window sort. */
+  case class PqAssignKernel(emb: Expression, model: Broadcast[PqModel])
       extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(emb, cbE, mE, dsubE, ksubE)
+    override def children: Seq[Expression] = Seq(emb)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def nullable: Boolean = emb.nullable
-    private lazy val m = litInt(mE)
-    private lazy val dsub = litInt(dsubE)
-    private lazy val ksub = litInt(ksubE)
-    private lazy val cb: Array[Double] = {
-      if (!cbE.foldable)
-        throw new IllegalArgumentException(s"expected literal codebook, got $cbE")
-      val arr = cbE.eval(null).asInstanceOf[ArrayData].toDoubleArray()
-      require(arr.length == m * ksub * dsub,
-        s"codebook length ${arr.length} != m*ksub*dsub = ${m * ksub * dsub}")
-      arr
-    }
+    @transient private lazy val pq = model.value
     override def eval(input: InternalRow): Any = {
       val eAny = emb.eval(input)
       if (eAny == null) return null
-      val xs = doubles(eAny, emb.dataType, "graft_pq_assign")
+      val xs = doubles(eAny, emb.dataType, "PqAssignKernel")
+      val cb = pq.cb; val m = pq.m; val dsub = pq.dsub; val ksub = pq.ksub
       val out = new Array[Int](m)
       var s = 0
       while (s < m) {
@@ -895,52 +861,44 @@ object expressions {
       UnsafeArrayData.fromPrimitiveArray(out)
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(emb = c(0), cbE = c(1), mE = c(2), dsubE = c(3), ksubE = c(4))
+      copy(emb = c(0))
   }
 
   // ------------------------------------------------------------------
 
-  /** graft_ivf_assign(embedding ARRAY<FLOAT|DOUBLE>, cells ARRAY<BIGINT>,
-    * cv ARRAY<DOUBLE>, dim INT) → BIGINT
+  /** IVF centroids for [[IvfAssignKernel]]: `cells` ascending cell ids
+    * and `cv` their `dim`-component centroids, flattened. */
+  final case class IvfModel(cells: Array[Long], cv: Array[Double], dim: Int) {
+    require((1 until cells.length).forall(i => cells(i - 1) < cells(i)),
+      "cell ids must be ascending (the tie → lowest-cell contract)")
+    require(cv.length == cells.length * dim,
+      s"centroid array length ${cv.length} != nCells*dim = ${cells.length * dim}")
+  }
+
+  /** IvfAssignKernel(embedding ARRAY<FLOAT|DOUBLE>) → BIGINT, the
+    * [[IvfModel]] by reference (a broadcast field, built through
+    * [[models.kernel]])
     *
     * Fused IVF coarse-quantizer assignment: return the cell id of the
-    * max-cosine centroid (ties → lowest cell id — `cells` MUST be sorted
-    * ascending and is scanned with a strict `>`). `cells`/`cv` are
-    * LITERAL model arrays (nCells ids + nCells·dim flattened centroid
-    * components, decoded once per instance — the [[TreeWalk]] pattern).
-    * The cosine fold replicates [[CosineSim]] exactly (per-element
-    * float→double cast, sequential dot/na/nb accumulation over
-    * `min(len, dim)`, zero-norm → 0.0), so assignments are bitwise
-    * identical to the relational crossJoin → window-argmax form this
-    * replaces ([[graft.ops.Similarity.ivfAssign]]) — while running as
-    * ONE narrow projection: no centroid join, no per-vec window sort. */
-  case class IvfAssignKernel(emb: Expression, cellsE: Expression,
-      cvE: Expression, dimE: Expression)
+    * max-cosine centroid (ties → lowest cell id — the cells are scanned
+    * ascending with a strict `>`). The cosine fold replicates
+    * [[CosineSim]] exactly (per-element float→double cast, sequential
+    * dot/na/nb accumulation over `min(len, dim)`, zero-norm → 0.0), so
+    * assignments are bitwise identical to the relational crossJoin →
+    * window-argmax form this replaces ([[graft.ops.Similarity.ivfAssign]])
+    * — while running as ONE narrow projection: no centroid join, no
+    * per-vec window sort. */
+  case class IvfAssignKernel(emb: Expression, model: Broadcast[IvfModel])
       extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(emb, cellsE, cvE, dimE)
+    override def children: Seq[Expression] = Seq(emb)
     override def dataType: DataType = LongType
     override def nullable: Boolean = emb.nullable
-    private lazy val dim = litInt(dimE)
-    private def litArr(e: Expression): ArrayData =
-      if (!e.foldable)
-        throw new IllegalArgumentException(s"expected literal model array, got $e")
-      else e.eval(null).asInstanceOf[ArrayData]
-    private lazy val cells: Array[Long] = {
-      val arr = litArr(cellsE).toLongArray()
-      require((1 until arr.length).forall(i => arr(i - 1) < arr(i)),
-        "cell ids must be ascending (the tie → lowest-cell contract)")
-      arr
-    }
-    private lazy val cv: Array[Double] = {
-      val arr = litArr(cvE).toDoubleArray()
-      require(arr.length == cells.length * dim,
-        s"centroid array length ${arr.length} != nCells*dim = ${cells.length * dim}")
-      arr
-    }
+    @transient private lazy val ivf = model.value
     override def eval(input: InternalRow): Any = {
       val eAny = emb.eval(input)
       if (eAny == null) return null
-      val ys = doubles(eAny, emb.dataType, "graft_ivf_assign")
+      val ys = doubles(eAny, emb.dataType, "IvfAssignKernel")
+      val cells = ivf.cells; val cv = ivf.cv; val dim = ivf.dim
       var best = 0
       var bestCos = Double.NegativeInfinity
       var c = 0
@@ -962,7 +920,7 @@ object expressions {
       cells(best)
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(emb = c(0), cellsE = c(1), cvE = c(2), dimE = c(3))
+      copy(emb = c(0))
   }
 
   // ------------------------------------------------------------------
@@ -1095,37 +1053,43 @@ object expressions {
 
   // ------------------------------------------------------------------
 
-  /** graft_nb_score(gc ARRAY<BIGINT>, llk ARRAY<BIGINT>, priors
-    * ARRAY<BIGINT>) → ARRAY<BIGINT> `[pred_idx, score_micro, margin_micro]`
+  /** A trained Naive Bayes model for [[NbScoreKernel]]: `sources` in
+    * ascending name order, `llk(gram · S + s)` the micro-nat
+    * log-likelihood of gram under source s over the full 4096-slot domain
+    * (S = sources.length) and `priors(s)` the micro-nat priors. */
+  final case class NbModel(sources: Array[String], llk: Array[Long],
+                           priors: Array[Long]) {
+    require(priors.length == sources.length &&
+      llk.length == 4096 * sources.length, "NB model arrays must align")
+  }
+
+  /** NbScoreKernel(gc ARRAY<BIGINT>) → STRUCT<pred STRING,
+    * score_micro BIGINT, margin_micro BIGINT>, the [[NbModel]] by
+    * reference (a broadcast field, built through [[models.kernel]])
     *
     * Fused Naive Bayes scoring over the [[GramCounts]] unigram per-doc
-    * histogram: `llk` is the LITERAL dense model — `llk(gram · S + s)` the
-    * micro-nat log-likelihood of gram under source s (S = priors.length,
-    * gram over the full 4096-slot domain) — and `priors` the per-source
-    * micro-nat priors, both ordered by ascending source name. All int64
-    * (order-free); argmax ties resolve to the smaller index = the
-    * lexicographically smaller source, and `margin_micro` is the gap to
-    * the runner-up (0 with a single source). The literal arrays decode
-    * once per expression instance (the [[TreeWalk]] pattern), so scoring
-    * is one in-row multiply-add sweep — no explode, no join, no shuffle. */
-  case class NbScoreKernel(gcE: Expression, llkE: Expression,
-      priorsE: Expression)
+    * histogram. All int64 (order-free); argmax ties resolve to the
+    * smaller index = the lexicographically smaller source, and
+    * `margin_micro` is the gap to the runner-up (0 with a single source).
+    * Scoring is one in-row multiply-add sweep — no explode, no join, no
+    * shuffle. */
+  case class NbScoreKernel(gcE: Expression, model: Broadcast[NbModel])
       extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(gcE, llkE, priorsE)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def children: Seq[Expression] = Seq(gcE)
+    override def dataType: DataType = StructType(Seq(
+      StructField("pred", StringType, nullable = false),
+      StructField("score_micro", LongType, nullable = false),
+      StructField("margin_micro", LongType, nullable = false)))
     override def nullable: Boolean = gcE.nullable
-    private def litArr(e: Expression): Array[Long] =
-      if (!e.foldable)
-        throw new IllegalArgumentException(s"expected literal model array, got $e")
-      else e.eval(null).asInstanceOf[ArrayData].toLongArray()
-    private lazy val llk = litArr(llkE)
-    private lazy val priors = litArr(priorsE)
-    private lazy val nS = priors.length
+    @transient private lazy val nb = model.value
+    @transient private lazy val names = nb.sources.map(UTF8String.fromString)
     override def eval(input: InternalRow): Any = {
       val any = gcE.eval(input)
       if (any == null) return null
       val gc = any.asInstanceOf[ArrayData].toLongArray()
-      val scores = priors.clone()
+      val llk = nb.llk
+      val nS = nb.priors.length
+      val scores = nb.priors.clone()
       var i = 0
       while (i < gc.length) {
         val base = (gc(i) >>> CountBits).toInt * nS
@@ -1145,25 +1109,31 @@ object expressions {
         s += 1
       }
       if (nS == 1) margin = 0L
-      UnsafeArrayData.fromPrimitiveArray(
-        Array(best.toLong, scores(best), margin))
+      InternalRow(names(best), scores(best), margin)
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(gcE = c(0), llkE = c(1), priorsE = c(2))
+      copy(gcE = c(0))
   }
 
   // ------------------------------------------------------------------
 
-  /** graft_viterbi_seg(tokens ARRAY<INT>, uniT ARRAY<BIGINT>,
-    * uniS ARRAY<BIGINT>, biP ARRAY<BIGINT>, biS ARRAY<BIGINT>)
-    * → ARRAY<BIGINT> `[n_pieces, n_bi, ll_micro, checksum, code_0, …]`
+  /** A unigram-LM piece model for [[ViterbiSeg]]: `uniT`/`uniS` the
+    * sorted unigram piece codes (`t+2048`) and their micro-nat log
+    * probabilities, `biP`/`biS` the sorted candidate bigram codes
+    * ([[PackNgrams]] k=2 packing) and scores. */
+  final case class SegModel(uniT: Array[Long], uniS: Array[Long],
+                            biP: Array[Long], biS: Array[Long]) {
+    require(uniT.length == uniS.length && biP.length == biS.length,
+      "piece codes and scores must align")
+  }
+
+  /** ViterbiSeg(tokens ARRAY<INT>) → ARRAY<BIGINT>
+    * `[n_pieces, n_bi, ll_micro, checksum, code_0, …]`, the [[SegModel]]
+    * by reference (a broadcast field, built through [[models.kernel]])
     *
     * Viterbi segmentation of a token sequence under a unigram language
     * model over pieces of length 1-2 — the E-step of the SentencePiece-
-    * style unigram tokenizer trainer (hard-EM form). `uniT`/`uniS` are
-    * the sorted unigram piece codes (`t+2048`) and their micro-nat log
-    * probabilities; `biP`/`biS` the sorted candidate bigram codes
-    * ([[PackNgrams]] k=2 packing) and scores. All scores are exact
+    * style unigram tokenizer trainer (hard-EM form). All scores are exact
     * BIGINT micro-nats (the [[graft.ops.LanguageModel]] quantization
     * convention), so the DP is pure integer arithmetic — bitwise across
     * engines; ties prefer the bigram (the longer piece, SentencePiece's
@@ -1177,36 +1147,15 @@ object expressions {
     * (graft_remap_tokens) or extending the model with a floor score
     * (r5 ADVICE note).
     *
-    * The model arrays are per-row column arguments (broadcast
-    * 1-row dimension — the [[BpeApplyMerges]] zero-collect pattern).
-    *
     * Output: piece count, bigram-piece count, total path score,
     * position-weighted checksum `Σ (start+1)·code` pinning every piece's
     * identity and place, then the piece codes in start order. */
-  case class ViterbiSeg(tokens: Expression, uniT: Expression,
-      uniS: Expression, biP: Expression, biS: Expression)
+  case class ViterbiSeg(tokens: Expression, model: Broadcast[SegModel])
       extends Expression with CodegenFallback {
-    override def children: Seq[Expression] = Seq(tokens, uniT, uniS, biP, biS)
+    override def children: Seq[Expression] = Seq(tokens)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = children.exists(_.nullable)
-    // LITERAL model arrays decode once per expression instance (the
-    // [[TreeWalk]] pattern) — a per-row toLongArray() would copy the
-    // whole model for every document; non-literal (broadcast-column)
-    // wirings still decode per row
-    @transient private lazy val litModel
-        : Option[(Array[Long], Array[Long], Array[Long], Array[Long])] =
-      if (Seq(uniT, uniS, biP, biS).forall(_.foldable)) {
-        def arr(e: Expression) =
-          e.eval(null).asInstanceOf[ArrayData].toLongArray()
-        Some((arr(uniT), arr(uniS), arr(biP), arr(biS)))
-      } else None
-    private def litModelOrRow(input: InternalRow)
-        : (Array[Long], Array[Long], Array[Long], Array[Long]) =
-      litModel.getOrElse((
-        uniT.eval(input).asInstanceOf[ArrayData].toLongArray(),
-        uniS.eval(input).asInstanceOf[ArrayData].toLongArray(),
-        biP.eval(input).asInstanceOf[ArrayData].toLongArray(),
-        biS.eval(input).asInstanceOf[ArrayData].toLongArray()))
+    override def nullable: Boolean = tokens.nullable
+    @transient private lazy val seg = model.value
     private def bsearch(arr: Array[Long], key: Long): Int = {
       var lo = 0; var hi = arr.length - 1
       while (lo <= hi) {
@@ -1221,7 +1170,7 @@ object expressions {
       val tAny = tokens.eval(input)
       if (tAny == null) return null
       val ts = tAny.asInstanceOf[ArrayData].toIntArray()
-      val (ut, us, bp, bs) = litModelOrRow(input)
+      val ut = seg.uniT; val us = seg.uniS; val bp = seg.biP; val bs = seg.biS
       val n = ts.length
       if (n == 0)
         return UnsafeArrayData.fromPrimitiveArray(Array(0L, 0L, 0L, 0L))
@@ -1280,7 +1229,7 @@ object expressions {
       UnsafeArrayData.fromPrimitiveArray(out)
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-      copy(tokens = c(0), uniT = c(1), uniS = c(2), biP = c(3), biS = c(4))
+      copy(tokens = c(0))
   }
 
   // ------------------------------------------------------------------

@@ -2,7 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.expressions.{GramShape, corpusUnigrams, countedGrams}
+
+import graft.functions.models
+import graft.functions.expressions.{BigramNllScore, GramShape, corpusUnigrams,
+  countedGrams}
 
 /** Corpus-level statistical language modeling for data curation: add-one
   * smoothed bigram cross-entropy scoring (the CCNet-style "perplexity
@@ -53,6 +56,38 @@ object LanguageModel {
     c12.join(broadcast(c1), Seq("t1"))
   }
 
+  /** The dense alphabet-bounded nll table + fused scoring pass shared by
+    * [[scoreBigramNll]] and [[scoreBigramKn]] (r6): `nllOf` maps each
+    * model entry (gram, c12) to its micro-nat value; the 16.7M-slot int
+    * table broadcasts once and each document scores in ONE narrow kernel
+    * projection ([[graft.functions.expressions.BigramNllScore]], which
+    * holds the broadcast itself) — zero explode, zero join, zero
+    * aggregation exchange on the scoring side. */
+  private def scoreWithDense(seqs: DataFrame, grams: Array[Long],
+                             c12s: Array[Long], nllOf: (Long, Long) => Long,
+                             outCol: String): DataFrame = {
+    val dense = new Array[Int](4096 * 4096)
+    java.util.Arrays.fill(dense, Int.MinValue)
+    var i = 0
+    while (i < grams.length) {
+      val v = nllOf(grams(i), c12s(i))
+      require(v > Int.MinValue && v <= Int.MaxValue,
+        s"nll_micro $v out of the dense-table int range")
+      dense(grams(i).toInt) = v.toInt
+      i += 1
+    }
+    val bc = seqs.sparkSession.sparkContext.broadcast(dense)
+    // the kernel is null for a doc of < 2 tokens, and the generator drops
+    // it: a `size(tokens) >= 2` filter would be pushed below the source's
+    // balance exchange and synthesize every doc's tokens twice
+    seqs.select(col("doc_id"), explode(array_compact(array(
+        models.kernel(col("tokens"))(BigramNllScore(_, bc))))).as("__r"))
+      .select(col("doc_id"),
+        col("__r")(0).as("n_bigrams"),
+        (col("__r")(1).cast("double") /
+          (col("__r")(0) * lit(1000000L)).cast("double")).as(outCol))
+  }
+
   /** Per-document add-one-smoothed bigram negative log-likelihood:
     * `avg_nll = (1/n) Σ ln((c1 + V) / (c12 + 1))` in nats, with `V` the
     * unigram vocabulary size and the model fit on `seqs` itself (the
@@ -60,64 +95,33 @@ object LanguageModel {
     * [[bigramCounts]] there and join here). Low = predictable, fluent
     * under the corpus model; high = outlier (the filter threshold axis).
     * `n_bigrams` rides along so callers can re-weight. */
-  /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP —
-    * the [[graft.ops.NaiveBayes]] driver-math convention, oracle-pinned). */
-  private def microNat(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-
-  /** The dense alphabet-bounded nll table + fused scoring pass shared by
-    * [[scoreBigramNll]] and [[scoreBigramKn]] (r6): `nllOf` maps each
-    * model row (gram, c12) to its micro-nat value; the 16.7M-slot int
-    * table broadcasts once and each document scores in ONE narrow kernel
-    * projection ([[graft.functions.expressions.BigramNllScore]]) — zero
-    * explode, zero join, zero aggregation exchange on the scoring side. */
-  private def scoreWithDense(seqs: DataFrame, model: Array[(Long, Long)],
-                             nllOf: (Long, Long) => Long,
-                             outCol: String): DataFrame = {
-    val e = graft.functions.expressions
-    val dense = Array.fill(4096 * 4096)(Int.MinValue)
-    for ((gram, c12) <- model) {
-      val v = nllOf(gram, c12)
-      require(v > Int.MinValue && v <= Int.MaxValue,
-        s"nll_micro $v out of the dense-table int range")
-      dense(gram.toInt) = v.toInt
-    }
-    val bc = seqs.sparkSession.sparkContext.broadcast(dense)
-    val slot = e.BigramNllSlots.put(bc)
-    // the kernel is null for a doc of < 2 tokens, and the generator drops
-    // it: a `size(tokens) >= 2` filter would be pushed below the source's
-    // balance exchange and synthesize every doc's tokens twice
-    seqs.select(col("doc_id"), explode(array_compact(array(
-        call_function("graft_bigram_nll", col("tokens"), lit(slot))))).as("__r"))
-      .select(col("doc_id"),
-        col("__r")(0).as("n_bigrams"),
-        (col("__r")(1).cast("double") /
-          (col("__r")(0) * lit(1000000L)).cast("double")).as(outCol))
-  }
-
   def scoreBigramNll(seqs: DataFrame): DataFrame = {
     // r6 final shape (guide §1.2/§2.4): the model is vocab²-bounded
     // (≤16.7M distinct bigrams at ANY corpus size — the 12-bit token
-    // alphabet caps it), so ONE counting job collects it (bigram counts
-    // + tagged unigram rows for the vocabulary size V in the same union
-    // pass), the per-gram add-one nll is computed driver-side
-    // (micro-nat HALF_UP — the oracle-pinned quantization), and scoring
-    // is the fused dense-table kernel pass: the corpus side runs zero
-    // shuffles and zero joins. Replaces the r6-intermediate
+    // alphabet caps it), so ONE counting job folds it into primitive
+    // arrays (bigram counts + tagged unigram rows for the vocabulary size
+    // V in the same union pass), the per-gram add-one nll is computed
+    // driver-side (micro-nat HALF_UP — the oracle-pinned quantization),
+    // and scoring is the fused dense-table kernel pass: the corpus side
+    // runs zero shuffles and zero joins. Replaces the r6-intermediate
     // checkpoint + broadcast-join form (2.4 s) and the r5 corpus-window
     // form (3.4 s) — measured ~1.5 s at sf0.1, bitwise identical.
     graft.functions.expressions.register(seqs.sparkSession)
-    val rows = countedGrams(seqs, GramShape.Bigram, lit(0).as("k"))
-      .unionByName(countedGrams(seqs, GramShape.Unigram, lit(1).as("k")))
-      .groupBy(col("k"), col("gram")).agg(sum(col("n")).as("c12"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val v = rows.count(_._1 == 1).toLong
-    val model = rows.collect { case (0, g, c) => (g, c) }
+    val grams = Array.newBuilder[Long]
+    val c12s = Array.newBuilder[Long]
     val c1 = new Array[Long](4096)
-    for ((g, c) <- model) c1((g / 4096).toInt) += c
-    scoreWithDense(seqs, model,
-      (g, c12) => microNat(math.log(
+    var v = 0L
+    models.foldRows(countedGrams(seqs, GramShape.Bigram, lit(0).as("k"))
+        .unionByName(countedGrams(seqs, GramShape.Unigram, lit(1).as("k")))
+        .groupBy(col("k"), col("gram")).agg(sum(col("n")).as("c12"))) { r =>
+      if (r.getInt(0) == 1) v += 1
+      else {
+        val g = r.getLong(1); val c = r.getLong(2)
+        grams += g; c12s += c; c1((g / 4096).toInt) += c
+      }
+    }
+    scoreWithDense(seqs, grams.result(), c12s.result(),
+      (g, c12) => models.microNat(math.log(
         (c1((g / 4096).toInt) + v).toDouble / (c12 + 1).toDouble) * 1000000),
       "avg_nll")
   }
@@ -189,22 +193,25 @@ object LanguageModel {
     graft.functions.expressions.register(seqs.sparkSession)
     // per-doc distinct bigrams, counted in the row
     // ([[graft.functions.expressions.GramCounts]]): no corpus-sized
-    // (doc, gram) aggregation runs before the model's
-    val model = countedGrams(seqs, GramShape.Bigram)
-      .groupBy(col("gram")).agg(sum(col("n")).as("c12"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    // (doc, gram) aggregation runs before the model's; the four count
+    // families accumulate in the same fold that reads the model
+    val grams = Array.newBuilder[Long]
+    val c12s = Array.newBuilder[Long]
     val c1 = new Array[Long](4096)
     val n1w = new Array[Long](4096)
     val ncont = new Array[Long](4096)
     var n11 = 0L
-    for ((g, c) <- model) {
+    models.foldRows(countedGrams(seqs, GramShape.Bigram)
+        .groupBy(col("gram")).agg(sum(col("n")).as("c12"))) { r =>
+      val g = r.getLong(0); val c = r.getLong(1)
       val t1 = (g / 4096).toInt; val t2 = (g % 4096).toInt
+      grams += g; c12s += c
       c1(t1) += c; n1w(t1) += 1; ncont(t2) += 1; n11 += 1
     }
-    scoreWithDense(seqs, model,
+    scoreWithDense(seqs, grams.result(), c12s.result(),
       (g, c12) => {
         val t1 = (g / 4096).toInt; val t2 = (g % 4096).toInt
-        microNat(math.log(
+        models.microNat(math.log(
           (4 * c1(t1) * n11).toDouble /
             (math.max(4 * c12 - 3, 0L) * n11 + 3 * n1w(t1) * ncont(t2)).toDouble)
           * 1000000)

@@ -1,12 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.expressions.{GramShape, countedGrams,
-  explodeGramCounts, gramCounts, pack}
+import graft.functions.models
+import graft.functions.expressions.{GramShape, NbModel, NbScoreKernel,
+  countedGrams, explodeGramCounts, gramCounts, pack}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Multinomial Naive Bayes source classifier, trained IN the engine by
@@ -33,8 +35,8 @@ import scala.jdk.CollectionConverters._
   * division of exact int64s, rounded to int64 MICRO-NATS before any
   * aggregation — sums, argmax and margins are then pure int64 (order-free,
   * no float accumulation anywhere). The driver-side rounding mirrors
-  * Spark's `round(x)` exactly (BigDecimal.valueOf + HALF_UP — the same
-  * result DuckDB's `round` produces on these magnitudes). Unlike the
+  * Spark's `round(x)` exactly ([[graft.functions.models.microNat]] — the
+  * same result DuckDB's `round` produces on these magnitudes). Unlike the
   * avg-boundary ops, the OUTPUT here is int64 too, so the whole query is
   * bitwise, not just corpus-verified.
   *
@@ -58,43 +60,49 @@ import scala.jdk.CollectionConverters._
   */
 object NaiveBayes {
 
-  /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP). */
-  private def microNat(x: Double): Long =
-    java.math.BigDecimal.valueOf(x * 1000000)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+  /** A fit: the kernel's [[NbModel]] (dense llk over the 4096-slot gram
+    * domain, the smoothing floor on grams outside the vocabulary), the
+    * per-source floors `ln(1/(N_s+V))` and the ascending vocabulary. */
+  private final case class Fit(model: NbModel, floors: Array[Long],
+                               vocab: Array[Int])
 
-  /** One counting pass → driver-side closed form. Returns the dense
-    * `(gram, source, llk_micro)` model rows and `(source, prior_micro)`. */
-  private def fit(seqs: DataFrame): (Seq[Row], Seq[Row]) = {
+  /** One counting pass, folded into per-source primitive count arrays →
+    * the driver-side closed form. */
+  private def fit(seqs: DataFrame): Fit = {
     graft.functions.expressions.register(seqs.sparkSession)
     // ONE counting job for BOTH model tables (r6): each doc appends a
     // marker entry at gram 4096 (just above the 12-bit token domain, so
     // it can never collide with a real gram) with count 1 — the marker's
     // per-source sum IS the doc count the priors need, and the former
     // second counting job disappears
-    val DocMarker = 4096L
+    val DocMarker = 4096
     val counted = concat(
       coalesce(gramCounts(col("tokens"), GramShape.Unigram),
-        typedlit(Seq.empty[Long])),
+        array().cast("array<bigint>")),
       array(lit(pack(DocMarker, 1L))))
-    val rows = explodeGramCounts(seqs, counted, col("source"))
-      .groupBy(col("source"), col("gram")).agg(sum(col("n")).as("c_ts"))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-    val cts = rows.filter(_._1._2 != DocMarker).toMap
-    val ds = rows.collect { case ((s, DocMarker), c) => s -> c }.toMap
-    val sources = ds.keySet.toSeq.sorted
-    val vocab = cts.keySet.map(_._2).toSeq.sorted
-    val v = vocab.size.toLong
-    val ns = sources.map(s =>
-      s -> cts.collect { case ((`s`, _), c) => c }.sum).toMap
-    val model = for (g <- vocab; s <- sources) yield Row(g, s, microNat(
-      math.log((cts.getOrElse((s, g), 0L) + 1).toDouble
-        / (ns(s) + v).toDouble)))
-    val dTot = ds.values.sum
-    val priors = sources.map(s => Row(s,
-      microNat(math.log(ds(s).toDouble / dTot.toDouble)),
-      microNat(math.log(1.0 / (ns(s) + v).toDouble))))
-    (model, priors)
+    // per source: c_ts over the gram domain, then the doc count
+    val bySource = mutable.HashMap.empty[String, Array[Long]]
+    models.foldRows(explodeGramCounts(seqs, counted, col("source"))
+        .groupBy(col("source"), col("gram")).agg(sum(col("n")).as("c_ts"))) { r =>
+      bySource.getOrElseUpdate(r.getUTF8String(0).toString,
+        new Array[Long](DocMarker + 1))(r.getLong(1).toInt) = r.getLong(2)
+    }
+    val sources = bySource.keys.toArray.sorted
+    val cts = sources.map(bySource)
+    val nS = sources.length
+    val vocab = (0 until DocMarker).filter(g => cts.exists(_(g) > 0)).toArray
+    val v = vocab.length.toLong
+    val ns = cts.map(c => c.iterator.take(DocMarker).sum)
+    val llk = new Array[Long](DocMarker * nS)
+    for (g <- 0 until DocMarker; s <- 0 until nS)
+      llk(g * nS + s) = models.microNat(math.log(
+        (cts(s)(g) + 1).toDouble / (ns(s) + v).toDouble) * 1000000)
+    val dTot = cts.map(_(DocMarker)).sum
+    val priors = cts.map(c =>
+      models.microNat(math.log(c(DocMarker).toDouble / dTot.toDouble) * 1000000))
+    val floors = ns.map(n =>
+      models.microNat(math.log(1.0 / (n + v).toDouble) * 1000000))
+    Fit(NbModel(sources, llk, priors), floors, vocab)
   }
 
   private val ModelSchema = StructType(Seq(
@@ -105,7 +113,7 @@ object NaiveBayes {
     StructField("source", StringType, nullable = false),
     StructField("prior_micro", LongType, nullable = false),
     // the unseen-token smoothing floor ln(1/(N_s+V)) — applied by
-    // classifyRows to grams absent from the model, so scoring a LATER
+    // classifyWith to grams absent from the model, so scoring a LATER
     // corpus version against a persisted model follows the documented
     // held-out recipe instead of silently treating OOV grams as ln(1)=0
     StructField("floor_micro", LongType, nullable = false)))
@@ -114,12 +122,20 @@ object NaiveBayes {
     * model-export entry point. [[model]] / [[priors]] are conveniences
     * that each run their own counting job; callers wanting both must use
     * this to train once. */
-  def fitModel(seqs: DataFrame): (DataFrame, DataFrame) = {
-    val (m, p) = fit(seqs)
-    (seqs.sparkSession.createDataFrame(
-        new java.util.ArrayList[Row](m.asJava), ModelSchema),
-      seqs.sparkSession.createDataFrame(
-        new java.util.ArrayList[Row](p.asJava), PriorSchema))
+  def fitModel(seqs: DataFrame): (DataFrame, DataFrame) =
+    tables(seqs.sparkSession, fit(seqs))
+
+  /** A fit as its two tables: `(gram, source, llk_micro)` over the
+    * vocabulary × sources and `(source, prior_micro, floor_micro)`. */
+  private def tables(spark: SparkSession, f: Fit): (DataFrame, DataFrame) = {
+    val m = f.model
+    val nS = m.sources.length
+    val modelRows = for (g <- f.vocab.toSeq; s <- 0 until nS)
+      yield Row(g.toLong, m.sources(s), m.llk(g * nS + s))
+    val priorRows = (0 until nS).map(s =>
+      Row(m.sources(s), m.priors(s), f.floors(s)))
+    (spark.createDataFrame(modelRows.asJava, ModelSchema),
+      spark.createDataFrame(priorRows.asJava, PriorSchema))
   }
 
   /** Dense per-(gram, source) log-likelihood table in micro-nats:
@@ -139,9 +155,9 @@ object NaiveBayes {
     * `margin_micro` the gap to the runner-up (0 with a single source).
     *
     * Scoring is the fused [[graft.functions.expressions.NbScoreKernel]]:
-    * the dense model rides the plan as two literal arrays (4096·S + S
-    * int64s — model-sized, the [[TreeEnsemble.scoreLarge]] node-table
-    * pattern) and each document scores in ONE in-row multiply-add sweep
+    * the dense model (4096·S + S int64s — model-sized) is a broadcast
+    * field of the kernel, never a plan literal, and each document scores
+    * in ONE in-row multiply-add sweep
     * over its [[graft.functions.expressions.GramCounts]] histogram —
     * zero explode, zero join, zero exchange after the scan. Measured vs
     * the relational form ([[trainAndClassifyRelational]], kept as the
@@ -151,10 +167,8 @@ object NaiveBayes {
     * the kernel replaces with 100 k kernel calls. Zero-token documents
     * are excluded (they carry no evidence; mirrors the oracle's inner
     * join on the gram stream). */
-  def trainAndClassify(seqs: DataFrame): DataFrame = {
-    val (modelRows, priorRows) = fit(seqs)
-    classifyRows(seqs, modelRows, priorRows)
-  }
+  def trainAndClassify(seqs: DataFrame): DataFrame =
+    classify(seqs, fit(seqs).model)
 
   /** Classify `seqs` with an EXTERNAL trained model — the artifact
     * lifecycle entry point: persist [[fitModel]]'s two tables (e.g.
@@ -167,40 +181,46 @@ object NaiveBayes {
     * train → persist → load → classify round trip bitwise-equal to the
     * direct path. */
   def classifyWith(seqs: DataFrame, model: DataFrame,
-                   priors: DataFrame): DataFrame =
-    classifyRows(seqs,
-      model.select(col("gram"), col("source"), col("llk_micro")).collect(),
-      priors.select(col("source"), col("prior_micro"), col("floor_micro"))
-        .orderBy(col("source")).collect())
-
-  private def classifyRows(seqs: DataFrame, modelRows: Seq[Row],
-                           priorRows: Seq[Row]): DataFrame = {
-    graft.functions.expressions.register(seqs.sparkSession)
-    val sources = priorRows.map(_.getString(0))
+                   priors: DataFrame): DataFrame = {
+    val sources = mutable.ArrayBuffer.empty[String]
+    val priorArr = Array.newBuilder[Long]
+    val floors = Array.newBuilder[Long]
+    models.foldRows(priors.select(col("source"), col("prior_micro"),
+        col("floor_micro")).orderBy(col("source"))) { r =>
+      sources += r.getUTF8String(0).toString
+      priorArr += r.getLong(1); floors += r.getLong(2)
+    }
     require(sources == sources.sorted,
       "priors must be ordered by source name (the kernel tiebreak order)")
     val nS = sources.length
     // grams outside the trained vocabulary score the per-source smoothing
-    // floor ln(1/(N_s+V)) — never-hit for self-scoring (dense vocabulary),
-    // load-bearing when classifyWith scores a later corpus version
-    val llkFlat = Array.tabulate(4096 * nS)(i => priorRows(i % nS).getLong(2))
+    // floor ln(1/(N_s+V)) — load-bearing when a later corpus version is
+    // scored against a persisted model
+    val fl = floors.result()
+    val llk = Array.tabulate(4096 * nS)(i => fl(i % nS))
     val sIdx = sources.zipWithIndex.toMap
-    modelRows.foreach { r =>
-      llkFlat(r.getLong(0).toInt * nS + sIdx(r.getString(1))) = r.getLong(2)
+    models.foldRows(model.select(col("gram"), col("source"),
+        col("llk_micro"))) { r =>
+      llk(r.getLong(0).toInt * nS + sIdx(r.getUTF8String(1).toString)) =
+        r.getLong(2)
     }
-    val priorsArr = priorRows.map(_.getLong(1)).toArray
+    classify(seqs, NbModel(sources.toArray, llk, priorArr.result()))
+  }
+
+  /** Score every document of `seqs` with `model` in the fused kernel. */
+  private def classify(seqs: DataFrame, model: NbModel): DataFrame = {
+    graft.functions.expressions.register(seqs.sparkSession)
+    val bc = seqs.sparkSession.sparkContext.broadcast(model)
     // docs without tokens drop out through the generator, not a filter: a
     // filter would be pushed below the source's balance exchange and
     // synthesize every doc's tokens twice
     seqs.select(col("doc_id"), col("source").as("label"),
         explode(array_compact(array(when(size(col("tokens")) > 0,
-          call_function("graft_nb_score",
-            gramCounts(col("tokens"), GramShape.Unigram),
-            typedlit(llkFlat), typedlit(priorsArr)))))).as("__r"))
-      .select(col("doc_id"), col("label"),
-        element_at(typedlit(sources), col("__r")(0).cast("int") + 1)
-          .as("pred"),
-        col("__r")(1).as("score_micro"), col("__r")(2).as("margin_micro"))
+          models.kernel(gramCounts(col("tokens"), GramShape.Unigram))(
+            NbScoreKernel(_, bc)))))).as("__r"))
+      .select(col("doc_id"), col("label"), col("__r.pred").as("pred"),
+        col("__r.score_micro").as("score_micro"),
+        col("__r.margin_micro").as("margin_micro"))
       .withColumn("correct", col("label") === col("pred"))
   }
 
@@ -210,14 +230,9 @@ object NaiveBayes {
     * numbers) but kept as the independent derivation the spec pins the
     * kernel against bitwise. */
   def trainAndClassifyRelational(seqs: DataFrame): DataFrame = {
-    val spark = seqs.sparkSession
-    val (modelRows, priorRows) = fit(seqs)
-    val m = spark.createDataFrame(
-      new java.util.ArrayList[Row](modelRows.asJava), ModelSchema)
-      .withColumnRenamed("source", "pred")
-    val p = spark.createDataFrame(
-      new java.util.ArrayList[Row](priorRows.asJava), PriorSchema)
-      .withColumnRenamed("source", "pred")
+    val (m0, p0) = fitModel(seqs)
+    val m = m0.withColumnRenamed("source", "pred")
+    val p = p0.withColumnRenamed("source", "pred")
     // per-doc distinct grams, counted in the row; `source` rides along
     // (functionally dependent on `doc_id`), so the label needs no join
     val scores = countedGrams(seqs, GramShape.Unigram,

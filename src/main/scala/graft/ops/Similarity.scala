@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions
+import graft.functions.{expressions, models}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`embedding: array<float>`).
@@ -333,33 +333,31 @@ object Similarity {
     ivfAssign(embeddings, cents(embeddings0, nCells))
   }
 
-  /** A collected `ARRAY<FLOAT>` or `ARRAY<DOUBLE>` value as doubles. */
-  private def doubles(v: Any): Array[Double] = v match {
-    case s: scala.collection.Seq[_] => s.map {
-      case f: java.lang.Float  => f.toDouble
-      case d: java.lang.Double => d.doubleValue()
-    }.toArray
-  }
-
   /** Assignment pass shared by the bootstrap and trained IVF paths —
     * r6 rewrite: the centroid table is model-sized (nCells rows), so it
-    * collects to the driver and rides the plan as literal arrays into the
-    * fused [[expressions.IvfAssignKernel]] projection (exact
+    * folds into driver arrays and reaches the fused
+    * [[expressions.IvfAssignKernel]] projection by reference (exact
     * [[expressions.CosineSim]] fold, ties → lowest cell id) — ONE narrow
     * pass over the corpus instead of crossJoin → window-argmax (which
     * paid a corpus×nCells exchange + sort per call). */
   private def ivfAssign(embeddings: DataFrame, centsDf: DataFrame): DataFrame = {
     expressions.register(embeddings.sparkSession)
-    val rows = centsDf.select(col("cell"), col("cv"))
-      .orderBy(col("cell")).collect()
-    require(rows.nonEmpty, "ivf assignment needs at least one centroid")
-    val cellIds = rows.map(_.getLong(0))
-    val cvs = rows.map(r => doubles(r.get(1)))
-    val dim = cvs.head.length
-    require(cvs.forall(_.length == dim), "centroid dims must agree")
+    val cents = centsDf.select(col("cell"), col("cv")).orderBy(col("cell"))
+    val cvType = cents.schema("cv").dataType
+    val cellIds = Array.newBuilder[Long]
+    val cvs = Array.newBuilder[Double]
+    var dim = -1
+    models.foldRows(cents) { r =>
+      val cv = expressions.doubles(r.getArray(1), cvType, "ivfAssign")
+      require(dim < 0 || cv.length == dim, "centroid dims must agree")
+      dim = cv.length
+      cellIds += r.getLong(0); cvs ++= cv
+    }
+    require(dim >= 0, "ivf assignment needs at least one centroid")
+    val bc = embeddings.sparkSession.sparkContext.broadcast(
+      expressions.IvfModel(cellIds.result(), cvs.result(), dim))
     embeddings.select(col("vec_id"), col("label"),
-      call_function("graft_ivf_assign", col("embedding"),
-        typedlit(cellIds.toSeq), typedlit(cvs.flatten.toSeq), lit(dim))
+      models.kernel(col("embedding"))(expressions.IvfAssignKernel(_, bc))
         .as("cell"))
   }
 
@@ -1828,27 +1826,35 @@ object Similarity {
     * vector (no subvector explode, no broadcast join, no per-(vec, sub)
     * window sort), and the quantized-BIGINT component sums reduce through
     * one map-side-combined `(sub, code, pos)` exchange of ≤ m·ksub·dsub
-    * aggregate rows, collected to the driver (the [[graft.ops.GbdtTrain]]
-    * per-round model-sized-collect precedent). Codes that lose all
+    * aggregate rows, folded into the driver codebook (the
+    * [[graft.ops.GbdtTrain]] per-round model-sized-collect precedent);
+    * each round's codebook reaches the kernel by reference. Codes that lose all
     * members keep their previous codeword. Bitwise identical to the
     * replaced relational Lloyd (OpsSpec pins codes/codewords): the kernel
     * replicates the [[expressions.L2Sq]] fold and ties → lowest code, and
     * the component mean is the same single IEEE division of exact int64s.
     *
-    * Returns (flattened codebook `cb[(s·ksubEff + c)·dsub + p]`, ksubEff)
-    * where ksubEff ≤ ksub is the seed-sample size (corpora smaller than
-    * ~13·ksub yield fewer seeds — the documented pqSeed stride gate). */
+    * Returns the model with its flattened codebook
+    * `cb[(s·ksubEff + c)·dsub + p]`, where ksubEff ≤ ksub is the
+    * seed-sample size (corpora smaller than ~13·ksub yield fewer seeds —
+    * the documented pqSeed stride gate). */
   private def pqTrainModel(embeddings0: DataFrame, m: Int, dsub: Int,
-                           ksub: Int, iters: Int): (Array[Double], Int) = {
+                           ksub: Int, iters: Int): expressions.PqModel = {
     expressions.register(embeddings0.sparkSession)
-    val seedRows = embeddings0.filter(expr("vec_id % 13 = 3"))
+    val seeds = embeddings0.filter(expr("vec_id % 13 = 3"))
       .orderBy(col("vec_id")).limit(ksub)
-      .select(col("embedding")).collect()
+      .select(col("embedding"))
+    val embType = seeds.schema("embedding").dataType
+    val seedVecs = Array.newBuilder[Array[Double]]
+    models.foldRows(seeds) { r =>
+      seedVecs += expressions.doubles(r.getArray(0), embType, "pqTrainModel")
+    }
+    val seedRows = seedVecs.result()
     val kEff = seedRows.length
     require(kEff > 0, "pq seed stride produced no codewords")
     val cb = new Array[Double](m * kEff * dsub)
     for (c <- 0 until kEff) {
-      val e = doubles(seedRows(c).get(0))
+      val e = seedRows(c)
       for (s <- 0 until m; p <- 0 until dsub) {
         val idx = s * dsub + p
         if (idx < e.length) cb((s * kEff + c) * dsub + p) = e(idx)
@@ -1856,41 +1862,40 @@ object Similarity {
     }
     val emb = graft.core.Partitioning.balance(embeddings0, "vec_id")
     for (_ <- 1 to iters) {
-      val sums = emb.select(col("embedding"),
-          posexplode(call_function("graft_pq_assign", col("embedding"),
-            typedlit(cb.toSeq), lit(m), lit(dsub), lit(kEff)))
-            .as(Seq("sub", "code")))
+      val model = expressions.PqModel(cb.clone(), m, dsub, kEff)
+      models.foldRows(emb.select(col("embedding"),
+          posexplode(pqAssignCol(emb, model)).as(Seq("sub", "code")))
         .select(col("sub"), col("code"), posexplode(expr(
           s"transform(slice(embedding, sub * $dsub + 1, $dsub), x -> CAST(x AS DOUBLE))"))
           .as(Seq("pos", "x")))
         .groupBy(col("sub"), col("code"), col("pos"))
         .agg(sum(expr("CAST(floor(x * 1048576) AS BIGINT)")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      for (r <- sums) {
+          count(lit(1)).as("n"))) { r =>
         val s = r.getInt(0); val c = r.getInt(1); val p = r.getInt(2)
         cb((s * kEff + c) * dsub + p) =
           r.getLong(3).toDouble / (r.getLong(4) * 1048576L).toDouble
       }
     }
-    (cb, kEff)
+    expressions.PqModel(cb, m, dsub, kEff)
   }
 
-  /** The fused-kernel code assignment column for a trained model. */
-  private def pqAssignCol(model: Array[Double], m: Int, dsub: Int,
-                          kEff: Int): org.apache.spark.sql.Column =
-    call_function("graft_pq_assign", col("embedding"),
-      typedlit(model.toSeq), lit(m), lit(dsub), lit(kEff))
+  /** The fused-kernel code assignment column for a trained model, which
+    * reaches the kernel by reference. */
+  private def pqAssignCol(df: DataFrame,
+                          model: expressions.PqModel): org.apache.spark.sql.Column = {
+    val bc = df.sparkSession.sparkContext.broadcast(model)
+    models.kernel(col("embedding"))(expressions.PqAssignKernel(_, bc))
+  }
 
   /** (sub, code, cv DOUBLE[dsub]) frame of a driver-side model — the
     * broadcastable codebook shape the ADC tables consume. */
   private def cbFrame(spark: org.apache.spark.sql.SparkSession,
-                      model: Array[Double], m: Int, dsub: Int,
-                      kEff: Int): DataFrame = {
+                      model: expressions.PqModel): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val rows = (for (s <- 0 until m; c <- 0 until kEff) yield
-      org.apache.spark.sql.Row(s, c,
-        (0 until dsub).map(p => model((s * kEff + c) * dsub + p)))).asJava
+    val dsub = model.dsub
+    val rows = (for (s <- 0 until model.m; c <- 0 until model.ksub) yield
+      org.apache.spark.sql.Row(s, c, (0 until dsub).map(p =>
+        model.cb((s * model.ksub + c) * dsub + p)))).asJava
     spark.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("sub",
@@ -1907,8 +1912,8 @@ object Similarity {
     * — [[pqTrainModel]] materialized for the oracle/ADC consumers. */
   def pqTrainCodebook(embeddings0: DataFrame, m: Int, dsub: Int, ksub: Int,
                       iters: Int): DataFrame = {
-    val (model, kEff) = pqTrainModel(embeddings0, m, dsub, ksub, iters)
-    cbFrame(embeddings0.sparkSession, model, m, dsub, kEff)
+    cbFrame(embeddings0.sparkSession,
+      pqTrainModel(embeddings0, m, dsub, ksub, iters))
   }
 
   /** Driver-facing trained-codebook report: one scalar row per codeword
@@ -1925,10 +1930,10 @@ object Similarity {
     * fused-kernel narrow pass (no explode/join/window). */
   def pqCodes(embeddings0: DataFrame, m: Int, dsub: Int, ksub: Int,
               iters: Int): DataFrame = {
-    val (model, kEff) = pqTrainModel(embeddings0, m, dsub, ksub, iters)
-    graft.core.Partitioning.balance(embeddings0, "vec_id")
-      .select(col("vec_id"),
-        posexplode(pqAssignCol(model, m, dsub, kEff)).as(Seq("sub", "code")))
+    val model = pqTrainModel(embeddings0, m, dsub, ksub, iters)
+    val emb = graft.core.Partitioning.balance(embeddings0, "vec_id")
+    emb.select(col("vec_id"),
+        posexplode(pqAssignCol(emb, model)).as(Seq("sub", "code")))
       .select(col("vec_id"), col("sub"), col("code"))
   }
 
@@ -1942,11 +1947,11 @@ object Similarity {
   def pqAdcRecall(embeddings0: DataFrame, nQueries: Int, k: Int, m: Int,
                   dsub: Int, ksub: Int, iters: Int): DataFrame = {
     expressions.register(embeddings0.sparkSession)
-    val (model, kEff) = pqTrainModel(embeddings0, m, dsub, ksub, iters)
-    val cb = cbFrame(embeddings0.sparkSession, model, m, dsub, kEff)
-    val codes = graft.core.Partitioning.balance(embeddings0, "vec_id")
-      .select(col("vec_id"),
-        posexplode(pqAssignCol(model, m, dsub, kEff)).as(Seq("sub", "code")))
+    val model = pqTrainModel(embeddings0, m, dsub, ksub, iters)
+    val cb = cbFrame(embeddings0.sparkSession, model)
+    val emb = graft.core.Partitioning.balance(embeddings0, "vec_id")
+    val codes = emb.select(col("vec_id"),
+        posexplode(pqAssignCol(emb, model)).as(Seq("sub", "code")))
       .select(col("vec_id"), col("sub"), col("code"))
     val exact = bruteTopK(embeddings0, nQueries, k)
       .select(col("query_id"), col("neighbor_id"))
@@ -2187,10 +2192,10 @@ object Similarity {
     val emb = graft.core.Partitioning.balance(embeddings0, "vec_id")
     val cells = ivfAssign(emb, cents(embeddings0, nCells))
       .select(col("vec_id"), col("cell"))
-    val (model, kEff) = pqTrainModel(embeddings0, m, dsub, ksub, iters)
-    val cb = cbFrame(embeddings0.sparkSession, model, m, dsub, kEff)
+    val model = pqTrainModel(embeddings0, m, dsub, ksub, iters)
+    val cb = cbFrame(embeddings0.sparkSession, model)
     val codes = emb.select(col("vec_id"),
-        posexplode(pqAssignCol(model, m, dsub, kEff)).as(Seq("sub", "code")))
+        posexplode(pqAssignCol(emb, model)).as(Seq("sub", "code")))
       .select(col("vec_id"), col("sub"), col("code"))
     val exact = bruteTopK(embeddings0, nQueries, k)
       .select(col("query_id"), col("neighbor_id"))

@@ -1,9 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.expressions.corpusUnigrams
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import graft.functions.models
+import graft.functions.expressions.{SegModel, ViterbiSeg, corpusUnigrams}
 
 /** Distributed BPE tokenizer training: iterative adjacent-pair counting +
   * greedy merge over the pre-tokenized corpus.
@@ -553,10 +555,9 @@ object Tokenizer {
     * the former ~10-stage packed-aggregate chain (tot crossJoins +
     * per-side collect_list single-reducer aggregations + an eager
     * checkpoint). Score quantization replicates the SQL
-    * `CAST(round(ln(c/total0)·10^6) AS BIGINT)` exactly (BigDecimal
-    * HALF_UP — Spark's round semantics on doubles). */
-  private def unigramModelArrays(seqs: DataFrame, w: Int, b: Int)
-      : (Array[Long], Array[Long], Array[Long], Array[Long]) = {
+    * `CAST(round(ln(c/total0)·10^6) AS BIGINT)` exactly
+    * ([[graft.functions.models.microNat]]). */
+  private def unigramModelArrays(seqs: DataFrame, w: Int, b: Int): SegModel = {
     graft.functions.expressions.register(seqs.sparkSession)
     val tw = seqs.select(expr(s"slice(tokens, 1, $w)").as("wtoks"))
     // BOTH count families in ONE job: bigram codes ride the same explode
@@ -566,33 +567,35 @@ object Tokenizer {
     // bigrams by (count desc, code asc), of which the first b are kept —
     // no window sends the bigram census through one partition
     val tag = 1L << 25
-    val rows = tw.select(explode(concat(
+    val codes = Array.newBuilder[Long]
+    val counts = Array.newBuilder[Long]
+    models.foldRows(tw.select(explode(concat(
         expr("graft_pack_ngrams(wtoks, 1)"),
         expr(s"transform(graft_pack_ngrams(wtoks, 2), c -> c + $tag)")))
         .as("code"))
       .groupBy(col("code")).agg(count(lit(1)).as("c"))
       .orderBy((col("code") >= tag).asc, col("c").desc, col("code").asc)
-      .limit(4096 + b)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .limit(4096 + b)) { r => codes += r.getLong(0); counts += r.getLong(1) }
+    val rows = codes.result().zip(counts.result())
     val u1 = rows.filter(_._1 < tag)
     require(u1.length <= 4096, "unigram codes beyond the 12-bit token domain")
     val b2 = rows.filter(_._1 >= tag).take(b).map(p => (p._1 - tag, p._2))
     val total0 = u1.map(_._2).sum + b2.map(_._2).sum
     def score(c: Long): Long =
-      java.math.BigDecimal.valueOf(
-          math.log(c.toDouble / total0.toDouble) * 1000000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      models.microNat(math.log(c.toDouble / total0.toDouble) * 1000000)
     val us = u1.sortBy(_._1)
     val bs = b2.sortBy(_._1)
-    (us.map(_._1), us.map(p => score(p._2)),
+    SegModel(us.map(_._1), us.map(p => score(p._2)),
       bs.map(_._1), bs.map(p => score(p._2)))
   }
 
+  /** [[unigramModelArrays]] as a one-row table `(ut, us, bt, bs2)`. */
   def unigramModel(seqs: DataFrame, w: Int, b: Int): DataFrame = {
-    val (ut, us, bt, bs2) = unigramModelArrays(seqs, w, b)
-    seqs.sparkSession.range(1).select(
-      typedlit(ut).as("ut"), typedlit(us).as("us"),
-      typedlit(bt).as("bt"), typedlit(bs2).as("bs2"))
+    val m = unigramModelArrays(seqs, w, b)
+    val arr = ArrayType(LongType, containsNull = false)
+    seqs.sparkSession.createDataFrame(
+      java.util.List.of(Row(m.uniT.toSeq, m.uniS.toSeq, m.biP.toSeq, m.biS.toSeq)),
+      StructType(Seq("ut", "us", "bt", "bs2").map(StructField(_, arr, nullable = false))))
   }
 
   /** Per-doc Viterbi segmentation under [[unigramModel]]:
@@ -600,17 +603,15 @@ object Tokenizer {
     * `[n_pieces, n_bi, ll_micro, checksum, code…]` layout. */
   def unigramSegmented(seqs: DataFrame, w: Int, b: Int): DataFrame = {
     // r6: the model is (window vocab + b)-bounded — built driver-side
-    // ([[unigramModelArrays]], the NB literal-model precedent) and ridden
-    // into the Viterbi kernel as foldable literals, which the kernel
-    // decodes once per instance instead of copying the arrays per
-    // document; drops the crossJoin and the model checkpoint barrier
+    // ([[unigramModelArrays]]) and handed to the Viterbi kernel by
+    // reference, so no document copies the arrays and the plan holds no
+    // model literal; drops the crossJoin and the model checkpoint barrier
     // from the plan. Scores are the identical micro-nat integers.
-    val (ut, us, bt, bs2) = unigramModelArrays(seqs, w, b)
+    val bc = seqs.sparkSession.sparkContext.broadcast(
+      unigramModelArrays(seqs, w, b))
     seqs.select(col("doc_id"), expr(s"slice(tokens, 1, $w)").as("wtoks"))
       .select(col("doc_id"), size(col("wtoks")).as("n_win"),
-        call_function("graft_viterbi_seg", col("wtoks"),
-          typedlit(ut), typedlit(us), typedlit(bt),
-          typedlit(bs2)).as("seg"))
+        models.kernel(col("wtoks"))(ViterbiSeg(_, bc)).as("seg"))
   }
 
   /** Driver-facing segmentation report: per-doc piece/bigram counts, the

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.sources.Seqs
 
@@ -174,7 +176,7 @@ object CurationQueries {
     // exact n-gram Jaccard verification of the LSH candidates — the
     // candidate-pair entry point (O(|pairs|), never quadratic)
     "dedup_verify_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = readTable(s, dir, "documents")
         .filter(expr(Seqs.DedupSubPred))
         .select(concat(lit("d"), lpad(col("doc_id").cast("string"), 6, "0"))
           .as("doc_id"), col("text"))
@@ -218,26 +220,26 @@ object CurationQueries {
 
     // recall@k of the LSH bucket path vs the exact cosine baseline
     "ann_recall" -> ((s, dir) =>
-      Similarity.annRecall(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.annRecall(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, LshPlanes)),
 
     // NDCG@k + MRR of the same ANN path, graded by exact-baseline rank —
     // rewards returning the RIGHT neighbors EARLY (recall@k cannot see
     // ordering); micro-unit integer DCG terms keep it bitwise
     "ann_ndcg" -> ((s, dir) =>
-      Similarity.annRankingMetrics(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.annRankingMetrics(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, LshPlanes)),
 
     // int8 scalar quantization (FAISS-style SQ8) + reconstruction-error
     // report — the 4x-smaller candidate store for the ANN scale path
     "embed_quant" -> ((s, dir) =>
-      Similarity.quantizeInt8(s.read.parquet(s"$dir/embeddings.parquet"))),
+      Similarity.quantizeInt8(readTable(s, dir, "embeddings"))),
 
     // per-label embedding-centroid drift (norm + cosine to global/rest
     // centroids) — the semantic drift screen next to source_drift's
     // token-space JSD; one corpus pass, exact integer component sums
     "centroid_drift" -> ((s, dir) =>
-      Similarity.centroidDrift(s.read.parquet(s"$dir/embeddings.parquet"))),
+      Similarity.centroidDrift(readTable(s, dir, "embeddings"))),
 
     // Johnson–Lindenstrauss ±1 random projection 64 -> 16 dims + norm
     // preservation report — the dimensionality shrink next to
@@ -245,7 +247,7 @@ object CurationQueries {
     // literals from the shared rpSign rule
     "rand_proj" -> ((s, dir) =>
       Similarity.randomProject(
-        s.read.parquet(s"$dir/embeddings.parquet"), RpDim, RpK)),
+        readTable(s, dir, "embeddings"), RpDim, RpK)),
 
 
     // near-dup pairs that straddle the train/val/test hash split — the
@@ -254,11 +256,11 @@ object CurationQueries {
     "contam_embed" -> ((s, dir) =>
       Similarity.crossSplitContam(
         Similarity.plantNearDups(
-          s.read.parquet(s"$dir/embeddings.parquet"), EmbedPlantMod),
+          readTable(s, dir, "embeddings"), EmbedPlantMod),
         EmbedBands, EmbedBits, EmbedMinCos)),
 
     "dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(s.read.parquet(s"$dir/documents.parquet"))),
+      Dedup.exactGroups(readTable(s, dir, "documents"))),
 
     // Driver-checkable digest form: md5 over the canonical CSV rendering of
     // the int64 signature / band arrays (integer formatting is identical in
@@ -276,39 +278,39 @@ object CurationQueries {
       Dedup.lshCandidates(Seqs.fromDocumentsSub(s, dir))),
 
     "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhash(s.read.parquet(s"$dir/documents.parquet"))),
+      Dedup.simhash(readTable(s, dir, "documents"))),
 
     "dedup_ngram" -> ((s, dir) =>
-      Dedup.ngramJaccard(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.ngramJaccard(readTable(s, dir, "documents"),
         NgramMinJaccard)),
 
     // per-source tokenizer fertility (tokens/word) + compression
     // (chars/token) — the tokenizer-vs-corpus health read
     "tokenizer_fertility" -> ((s, dir) =>
       TextAnalysis.fertilityReport(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     "text_analyze" -> ((s, dir) =>
-      TextAnalysis.analyze(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.analyze(readTable(s, dir, "documents"))
         .select("doc_id", "lang", "source", "n_chars", "n_words",
           "n_alnum_tokens", "n_bpe_tokens", "n_stopwords", "stopword_ratio",
           "mean_word_len", "quality_score", "lang_guess", "fingerprint")),
 
     "embed_topk" -> ((s, dir) =>
-      Similarity.bruteTopK(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.bruteTopK(readTable(s, dir, "embeddings"),
         TopKQueries, TopK)),
 
     // batch-hard triplet mining: per anchor, top-k highest-cosine
     // different-label negatives + hardest same-label positive + margin
     "hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.hardNegatives(readTable(s, dir, "embeddings"),
         TopKQueries, TopK)),
 
     // k-NN label-agreement screen: share of each anchor's top-k cosine
     // neighbors carrying its own label — the mislabel/label-noise detector
     "knn_label_check" -> ((s, dir) =>
       Similarity.knnLabelAgreement(
-        s.read.parquet(s"$dir/embeddings.parquet"), TopKQueries, KnnAgreeK)),
+        readTable(s, dir, "embeddings"), TopKQueries, KnnAgreeK)),
 
     // FULL-CORPUS batch-hard mining: every vector an anchor, neighbors
     // from the banded sign-LSH candidate join (ids-only; no broadcast
@@ -316,18 +318,18 @@ object CurationQueries {
     // oracle is hard_negatives
     "hard_negatives_lsh" -> ((s, dir) =>
       Similarity.hardNegativesLsh(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        readTable(s, dir, "embeddings"),
         HnLshBands, HnLshBits, TopK)),
 
     // FULL-CORPUS label-agreement screen over LSH candidates (knn_label_check
     // is its exact broadcast oracle)
     "knn_agree_lsh" -> ((s, dir) =>
       Similarity.knnAgreementLsh(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        readTable(s, dir, "embeddings"),
         HnLshBands, HnLshBits, KnnAgreeK)),
 
     "embed_lsh" -> ((s, dir) =>
-      Similarity.lshBuckets(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.lshBuckets(readTable(s, dir, "embeddings"),
         LshPlanes)),
 
     // embedding-cosine near-dup pairs (banded sign-LSH candidates joined on
@@ -336,7 +338,7 @@ object CurationQueries {
     "dedup_embed" -> ((s, dir) =>
       Similarity.embeddingNearDups(
         Similarity.plantNearDups(
-          s.read.parquet(s"$dir/embeddings.parquet"), EmbedPlantMod),
+          readTable(s, dir, "embeddings"), EmbedPlantMod),
         EmbedBands, EmbedBits, EmbedMinCos)),
 
     // SemDeDup: k-means cells + in-cell cosine pruning on the planted
@@ -345,7 +347,7 @@ object CurationQueries {
     "semdedup" -> ((s, dir) =>
       Similarity.semDedup(
         Similarity.plantNearDups(
-          s.read.parquet(s"$dir/embeddings.parquet"), EmbedPlantMod),
+          readTable(s, dir, "embeddings"), EmbedPlantMod),
         IvfCells, EmbedMinCos)),
 
     // greedy facility-location coreset: k rounds of exact integer
@@ -353,7 +355,7 @@ object CurationQueries {
     // corpus — the all-pairs form is the per-cell production oracle)
     "coreset_greedy" -> ((s, dir) =>
       Similarity.coresetGreedy(
-        s.read.parquet(s"$dir/embeddings.parquet")
+        readTable(s, dir, "embeddings")
           .filter(col("vec_id") < CoresetMaxId), CoresetK)),
 
     // PRODUCTION coreset: greedy-per-cell over the full corpus — one
@@ -362,7 +364,7 @@ object CurationQueries {
     // coreset_greedy above is its exact-form quality oracle
     "coreset_cells" -> ((s, dir) =>
       Similarity.coresetCells(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        readTable(s, dir, "embeddings"),
         CoresetCellsN, CoresetKPerCell)),
 
     // recall of the banded near-dup path vs brute-force planted ground
@@ -371,23 +373,23 @@ object CurationQueries {
     "embed_dedup_recall" -> ((s, dir) =>
       Similarity.embedDedupRecall(
         Similarity.plantNearDups(
-          s.read.parquet(s"$dir/embeddings.parquet")
+          readTable(s, dir, "embeddings")
             .filter(col("vec_id") < EmbedRecallMaxId), EmbedPlantMod),
         EmbedBands, EmbedBits, EmbedMinCos)),
 
     // IVF coarse-quantizer cells (sampled-centroid bootstrap)
     "ivf_cells" -> ((s, dir) =>
-      Similarity.ivfCells(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.ivfCells(readTable(s, dir, "embeddings"),
         IvfCells)),
 
     // recall@k of the IVF probe path vs the exact baseline
     "ivf_recall" -> ((s, dir) =>
-      Similarity.ivfRecall(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.ivfRecall(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, IvfCells, IvfProbe)),
 
     // Lloyd-trained IVF cell assignment (quantized k-means, IvfIters rounds)
     "ivf_train_cells" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = readTable(s, dir, "embeddings")
       Similarity.ivfCellsWith(emb,
         Similarity.ivfTrainedCents(emb, IvfCells, IvfIters))
     }),
@@ -396,25 +398,25 @@ object CurationQueries {
     // justifies the training step
     "ivf_recall_trained" -> ((s, dir) =>
       Similarity.ivfRecallTrainedVsBoot(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        readTable(s, dir, "embeddings"),
         TopKQueries, TopK, IvfCells, IvfProbe, IvfIters)),
 
     // PQ codebook training (per-subspace quantized Lloyd) — one scalar
     // row per codeword component, array-free, bitwise
     "pq_train" -> ((s, dir) =>
-      Similarity.pqTrainTable(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.pqTrainTable(readTable(s, dir, "embeddings"),
         PqM, PqDsub, PqKsub, PqIters)),
 
     // PQ encoding: the m-byte compressed representation of every vector
     // (one broadcast-join narrow pass against the trained codebook)
     "pq_codes" -> ((s, dir) =>
-      Similarity.pqCodes(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.pqCodes(readTable(s, dir, "embeddings"),
         PqM, PqDsub, PqKsub, PqIters)),
 
     // recall@k of ADC ranking over PQ codes vs the exact baseline — the
     // trust measurement for the compressed index
     "pq_recall" -> ((s, dir) =>
-      Similarity.pqAdcRecall(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.pqAdcRecall(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, PqM, PqDsub, PqKsub, PqIters)),
 
     // parallel-corpus mining: margin-criterion scoring of LSH candidate
@@ -422,7 +424,7 @@ object CurationQueries {
     // precision measurable against the planted ground truth
     "bitext_mine" -> ((s, dir) =>
       Similarity.bitextMine(
-        s.read.parquet(s"$dir/embeddings.parquet")
+        readTable(s, dir, "embeddings")
           .filter(col("vec_id") < EmbedRecallMaxId),
         EmbedPlantMod, EmbedBands, EmbedBits, BitextK, BitextTopM)),
 
@@ -430,14 +432,14 @@ object CurationQueries {
     // vs the full-dimension exact baseline (the serve-truncated-
     // embeddings trade-off measurement)
     "matryoshka_recall" -> ((s, dir) =>
-      Similarity.matryoshkaRecall(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.matryoshkaRecall(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, MrlDims)),
 
     // IVF-PQ composed index: coarse-cell candidates ranked by ADC over
     // PQ codes — the two-level compressed ANN layout; n_cand reads the
     // recall number against its probe budget
     "ivfpq_recall" -> ((s, dir) =>
-      Similarity.ivfPqRecall(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.ivfPqRecall(readTable(s, dir, "embeddings"),
         TopKQueries, TopK, IvfCells, IvfProbe, PqM, PqDsub, PqKsub,
         PqIters)),
 
@@ -477,7 +479,7 @@ object CurationQueries {
     // unlike rand(seed)/randomSplit, which are seeded per partition
     "hash_split" -> ((s, dir) =>
       graft.ops.Sampling.assignSplit(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id"),
+        readTable(s, dir, "documents").select("doc_id"),
         col("doc_id"))),
 
     // end-to-end curation: quality gate -> exact dedup -> near-dup cluster
@@ -500,20 +502,20 @@ object CurationQueries {
     // same hash slot as the splitter (rebalance-by-downsampling)
     "stratified_sample" -> ((s, dir) =>
       graft.ops.Sampling.sampleStratified(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "lang"),
+        readTable(s, dir, "documents").select("doc_id", "lang"),
         col("doc_id"), col("lang"), StratRates, StratDefault)),
 
     // corpus length-distribution report: per-lang discrete p50/p90/p99
     "length_report" -> ((s, dir) =>
       graft.ops.TextAnalysis.lengthReport(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     // deterministic epoch shuffle: heads of three epochs' global training
     // orders (orderBy hash + limit = distributed take-ordered, no global
     // window); emitting the shuffle key itself makes the ORDER part of the
     // bitwise contract, not just the head set
     "epoch_order" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = readTable(s, dir, "documents")
         .select(col("doc_id").cast("string").as("doc_id"))
       (0 until EpochN).map { e =>
         graft.ops.Sampling.epochShuffle(docs, col("doc_id"), e)
@@ -561,7 +563,7 @@ object CurationQueries {
     // over integer ranks, one divide) + threshold confusion metrics for
     // the hashed linear scorer against a deterministic label
     "eval_metrics" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = readTable(s, dir, "documents")
       val scored = graft.ops.LinearModel.score(
           base.select(col("doc_id"), col("text")),
           graft.ops.LinearModel.synthWeights(s, LinearDim),
@@ -577,39 +579,39 @@ object CurationQueries {
     // solve): document length model n_chars ~ ('e' count, space count)
     "ols_length" -> ((s, dir) =>
       graft.ops.Regression.fitLengthModel(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     // OLS influence diagnostics: per-doc leverage + Cook's distance over
     // the length model — the data-valuation / mislabeled-outlier screen
     "length_influence" -> ((s, dir) =>
       graft.ops.Regression.lengthInfluence(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     // cross-source quantile normalization: every doc's n_chars mapped to
     // the reference source's value at the same quantile position
     "quantile_norm" -> ((s, dir) =>
       graft.ops.Binning.quantileNormalize(
-        s.read.parquet(s"$dir/documents.parquet"), "n_chars", "source",
+        readTable(s, dir, "documents"), "n_chars", "source",
         DsirTargetSource)),
 
     // split conformal prediction: train-split fit, calibration-split
     // nonconformity quantile, test-split empirical coverage (alpha = 10%)
     "conformal" -> ((s, dir) =>
       graft.ops.Regression.conformalLength(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     // paired Poisson-bootstrap significance test: full length model vs
     // mean-only baseline; exact replicate sums, rank-selected CI
     "bootstrap_diff" -> ((s, dir) =>
       graft.ops.Regression.bootstrapLengthModel(
-        s.read.parquet(s"$dir/documents.parquet"), BootstrapB)),
+        readTable(s, dir, "documents"), BootstrapB)),
 
     // PII redaction: per-rule sequential count-and-mask (email/IPv4/phone)
     // over a deterministically PII-injected corpus; redacted text pinned
     // by length + md5 — one narrow projection per rule, no shuffle
     "redact_pii" -> ((s, dir) =>
       graft.ops.Redact.redact(graft.ops.Redact.injectPii(
-        s.read.parquet(s"$dir/documents.parquet")
+        readTable(s, dir, "documents")
           .select(col("doc_id"), col("text"))))),
 
     // fastText-style hashed linear quality filter: unigram+bigram hashing
@@ -618,7 +620,7 @@ object CurationQueries {
     // relational form IS the fast one — measured 2x faster than the
     // shuffle-free native kernel A/B (LinearModel.scoreKernel Scaladoc)
     "quality_linear" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = readTable(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       graft.ops.LinearModel.score(docs,
         graft.ops.LinearModel.synthWeights(s, LinearDim),
@@ -637,7 +639,7 @@ object CurationQueries {
     // with the held-out slice (doc_id % 97 = 0) — broadcast eval-gram set,
     // zero train-side shuffle before the per-doc count
     "decontaminate" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = readTable(s, dir, "documents")
       graft.ops.Contamination.flagContaminated(
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
@@ -648,7 +650,7 @@ object CurationQueries {
     // zero-shuffle narrow projection
     "repetition_stats" -> ((s, dir) =>
       graft.ops.TextAnalysis.repetitionStats(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        readTable(s, dir, "documents"))),
 
     // CCNet-style perplexity filter: per-doc add-one bigram cross-entropy
     // under the corpus model, exact micro-nat sums (order-free)
@@ -705,7 +707,7 @@ object CurationQueries {
     // document universes coincide
     "hybrid_rrf" -> ((s, dir) =>
       graft.ops.LanguageModel.hybridRrf(Seqs.fromDocumentsSub(s, dir),
-        s.read.parquet(s"$dir/embeddings.parquet")
+        readTable(s, dir, "embeddings")
           .filter(expr(Seqs.DedupSubPred.replace("doc_id", "vec_id"))),
         Bm25QueryMod, Bm25K)),
 
@@ -718,7 +720,7 @@ object CurationQueries {
     // power iteration: v_unit + explained-variance share, fully bitwise
     "pca_top" -> ((s, dir) =>
       graft.ops.Pca.powerIteration(
-        s.read.parquet(s"$dir/embeddings.parquet"), PcaIters)),
+        readTable(s, dir, "embeddings"), PcaIters)),
 
     // multinomial Naive Bayes source classifier TRAINED in the engine by
     // counting (two aggregations = the model), then applied to every doc;
@@ -742,7 +744,7 @@ object CurationQueries {
     // decile thresholds — the operating-point curve behind eval_metrics'
     // single-threshold confusion row
     "pr_curve" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = readTable(s, dir, "documents")
       val scored = graft.ops.LinearModel.score(
           base.select(col("doc_id"), col("text")),
           graft.ops.LinearModel.synthWeights(s, LinearDim),
@@ -765,13 +767,13 @@ object CurationQueries {
     // weights; gram-keyed throughout, never doc-pair-keyed
     "source_overlap" -> ((s, dir) =>
       graft.ops.Contamination.sourceOverlap(
-        s.read.parquet(s"$dir/documents.parquet"), ContamN)),
+        readTable(s, dir, "documents"), ContamN)),
 
     // equal-frequency discretizer: 10 bins of n_chars, value-based
     // assignment against rank-selected boundaries (reusable feature map)
     "quantile_bin" -> ((s, dir) =>
       graft.ops.Binning.quantileBin(
-        s.read.parquet(s"$dir/documents.parquet"),
+        readTable(s, dir, "documents"),
         "n_chars", "doc_id", BinK)),
 
     // per-group exact-k deterministic sample: k docs per source by
@@ -779,7 +781,7 @@ object CurationQueries {
     // keep-rates only hit k in expectation); rank is part of the contract
     "group_sample" -> ((s, dir) =>
       graft.ops.Sampling.groupSample(
-        s.read.parquet(s"$dir/documents.parquet")
+        readTable(s, dir, "documents")
           .select("doc_id", "source"),
         col("doc_id"), col("source"), GroupSampleK)),
 
@@ -794,7 +796,7 @@ object CurationQueries {
     // on the cross vocabulary, never per row
     "feature_cross" -> ((s, dir) =>
       graft.ops.Binning.hashedCross(
-        s.read.parquet(s"$dir/documents.parquet"),
+        readTable(s, dir, "documents"),
         Seq("lang", "source"), CrossDim)),
 
     // per-source two-sample Kolmogorov–Smirnov drift of doc length vs
@@ -803,7 +805,7 @@ object CurationQueries {
     // |V|x|S| grid windows, integer cross-product argmax
     "ks_drift" -> ((s, dir) =>
       graft.ops.FeatureStats.ksDrift(
-        s.read.parquet(s"$dir/documents.parquet"), "n_chars", "source")),
+        readTable(s, dir, "documents"), "n_chars", "source")),
 
     // greedy per-source token-budget fill: docs in hash-priority order
     // until each source's token budget crosses — the mixture-assembly
@@ -818,7 +820,7 @@ object CurationQueries {
     // log terms micro-nat quantized (the source_drift idiom)
     "psi_drift" -> ((s, dir) =>
       graft.ops.FeatureStats.psiDrift(
-        s.read.parquet(s"$dir/documents.parquet"),
+        readTable(s, dir, "documents"),
         "n_chars", "doc_id", "source", PsiBins)),
 
     // feature correlation matrix: single-pass int64 moment sums (one
@@ -826,7 +828,7 @@ object CurationQueries {
     // collinearity screen before model fitting
     "feature_corr" -> ((s, dir) =>
       graft.ops.FeatureStats.corrMatrix(
-        s.read.parquet(s"$dir/documents.parquet").select(
+        readTable(s, dir, "documents").select(
           col("n_chars"),
           expr(s"size(${graft.ops.TextAnalysis.wordsExpr})").as("n_words"),
           least(col("n_chars") * 16, lit(Seqs.MaxTokens)).as("n_tok")),
@@ -849,7 +851,7 @@ object CurationQueries {
     // bins, exact int64 score sums, mean predicted vs empirical positive
     // rate — the calibration complement of pr_curve's operating points
     "calibration" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = readTable(s, dir, "documents")
       val scored = graft.ops.LinearModel.score(
           base.select(col("doc_id"), col("text")),
           graft.ops.LinearModel.synthWeights(s, LinearDim),
@@ -866,7 +868,7 @@ object CurationQueries {
     // cumulative int64 segment means, one divide each; min/max lattice is
     // pure comparison) -- the corpus is touched only by the bin pass
     "isotonic" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = readTable(s, dir, "documents")
       val scored = graft.ops.LinearModel.score(
           base.select(col("doc_id"), col("text")),
           graft.ops.LinearModel.synthWeights(s, LinearDim),

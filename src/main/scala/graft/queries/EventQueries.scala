@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 import graft.operators.AsOfJoin
 
 /** Oracle-checked queries over the `events` stream table (event-time
@@ -33,7 +35,7 @@ object EventQueries {
 
     // gap-based sessionization per user (session_window batch analog)
     "events_sessionize" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
       ev.withColumn("gap", col("ts_us") - lag(col("ts_us"), 1).over(w))
@@ -48,7 +50,7 @@ object EventQueries {
 
     // as-of join: each click gets the latest view's value at-or-before it
     "events_asof" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val probes = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -60,7 +62,7 @@ object EventQueries {
 
     // staleness-bounded as-of: a view older than 1 h is no feature at all
     "events_asof_tol" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val probes = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -75,7 +77,7 @@ object EventQueries {
     // alignment / gap repair for non-label covariates — reads the future
     // by design, so it is NOT a training-feature path (see asOfNearest doc)
     "events_asof_nearest" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val probes = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -89,7 +91,7 @@ object EventQueries {
     // label attribution: first purchase strictly after each click, within
     // 1 day — the outcome-join that turns events into training labels
     "events_label_join" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val probes = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -104,7 +106,7 @@ object EventQueries {
     // trailing point-in-time window feature: purchases in the 24 h before
     // each click (count + exact-cents sum; empty history = 0, not null)
     "events_trailing" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val probes = ev.filter(col("event_type") === "click")
@@ -117,7 +119,7 @@ object EventQueries {
 
     // multi-horizon trailing features (1 h / 1 d / 7 d) in ONE window pass
     "events_trailing_multi" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val probes = ev.filter(col("event_type") === "click")
@@ -131,7 +133,7 @@ object EventQueries {
     // full trailing stat block (count/sum/min/max/population variance)
     // over the 24 h history — one union + one Window pass
     "events_trailing_stats" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val probes = ev.filter(col("event_type") === "click")
@@ -146,7 +148,7 @@ object EventQueries {
     // 16 buckets): exact power-of-two weights, one window pass — the
     // feature-store "decayed counts" with no floating exp(-lambda dt)
     "events_decay" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val probes = ev.filter(col("event_type") === "click")
@@ -161,7 +163,7 @@ object EventQueries {
     // state feature (1 h freshness) + 3-horizon trailing history + 1-day
     // forward label, all from one declarative plan
     "training_set" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       graft.features.TrainingSet.assemble(
@@ -183,7 +185,7 @@ object EventQueries {
     // (empirical-Bayes prior weight 20) — the "entity's historical average
     // outcome" feature, computed without reading the present or future
     "target_encode" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -198,7 +200,7 @@ object EventQueries {
     // span, purge = the 1-day label horizon (train rows whose labels cross
     // the cut are dropped), embargo = 1 h of post-boundary test rows
     "purged_split" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .select(col("event_id"), col("ts_us"))
       val bounds = ev.agg(min(col("ts_us")).as("__lo"), max(col("ts_us")).as("__hi"))
@@ -211,7 +213,7 @@ object EventQueries {
 
     // lag / lead / rank / running exact-integer sum per user
     "events_window" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
@@ -228,56 +230,56 @@ object EventQueries {
     // report read before choosing salt buckets (see Partitioning.saltKey)
     "skew_report" -> ((s, dir) =>
       graft.core.Partitioning.skewReport(
-        s.read.parquet(s"$dir/events.parquet"), "user_id", SkewTopK)),
+        readTable(s, dir, "events"), "user_id", SkewTopK)),
 
     // co-activity graph (shared time buckets, occupancy-capped) +
     // exact triangle counts / clustering per user — degree-ordered
     // orientation bounds wedge fanout by O(sqrt(m)) at any scale
     "triangle_stats" -> ((s, dir) =>
       graft.ops.Graph.coActivityTriangles(
-        s.read.parquet(s"$dir/events.parquet"), TriBucketUs, TriMaxOcc)),
+        readTable(s, dir, "events"), TriBucketUs, TriMaxOcc)),
 
     // two-sided CUSUM drift alarm on per-type daily mean value: the
     // sequential complement of the snapshot drift screens
     "value_cusum" -> ((s, dir) =>
       graft.ops.Cusum.dailyValueCusum(
-        s.read.parquet(s"$dir/events.parquet"), CusumKMicro, CusumHMicro)),
+        readTable(s, dir, "events"), CusumKMicro, CusumHMicro)),
 
     // ordered funnel conversion (signup -> view -> click -> purchase by
     // first-touch times): per-step reach + conversion fractions
     "event_funnel" -> ((s, dir) =>
       graft.ops.Markov.funnel(
-        s.read.parquet(s"$dir/events.parquet"), FunnelSteps)),
+        readTable(s, dir, "events"), FunnelSteps)),
 
     // weekly cohort retention table: users grouped by first-activity
     // week, per-offset active counts + retention fraction
     "retention_cohorts" -> ((s, dir) =>
       graft.ops.Markov.retentionCohorts(
-        s.read.parquet(s"$dir/events.parquet"))),
+        readTable(s, dir, "events"))),
 
     // empirical entropy rate of the transition chain: one-number
     // behavioral-predictability score (low = scripted/bot-like)
     "event_entropy_rate" -> ((s, dir) =>
       graft.ops.Markov.entropyRate(
-        s.read.parquet(s"$dir/events.parquet"), SessionGapUs)),
+        readTable(s, dir, "events"), SessionGapUs)),
 
     // session-scoped event-type transition matrix (first-order Markov):
     // exact counts, one divide per cell — funnel/bot-pattern screen
     "event_transitions" -> ((s, dir) =>
       graft.ops.Markov.transitions(
-        s.read.parquet(s"$dir/events.parquet"), SessionGapUs)),
+        readTable(s, dir, "events"), SessionGapUs)),
 
     // degree assortativity of the co-activity graph: exact integer
     // Pearson moments + one shared double tree (NULL on regular graphs)
     "graph_assortativity" -> ((s, dir) =>
       graft.ops.Graph.assortativity(graft.ops.Graph.coActivityEdges(
-        s.read.parquet(s"$dir/events.parquet"), TriBucketUs, TriMaxOcc))),
+        readTable(s, dir, "events"), TriBucketUs, TriMaxOcc))),
 
     // 12-core membership after exactly KCoreRounds peeling rounds, with an
     // in-band convergence flag (bounded-rounds discipline)
     "graph_kcore" -> ((s, dir) =>
       graft.ops.Graph.kCore(graft.ops.Graph.coActivityEdges(
-        s.read.parquet(s"$dir/events.parquet"), TriBucketUs, TriMaxOcc),
+        readTable(s, dir, "events"), TriBucketUs, TriMaxOcc),
         KCoreK, KCoreRounds)),
 
     // rendezvous (HRW) sharding: per-shard mass at n and n+1 shards +
@@ -285,7 +287,7 @@ object EventQueries {
     // re-layout cost read before growing a bucketed table
     "rendezvous_shards" -> ((s, dir) =>
       graft.core.Partitioning.rendezvousReport(
-        s.read.parquet(s"$dir/events.parquet"), "user_id", RendezvousN)),
+        readTable(s, dir, "events"), "user_id", RendezvousN)),
 
     // point-in-interval (range) join: each click × every campaign interval
     // of its user that was ACTIVE at click time. Campaigns are synthesized
@@ -293,7 +295,7 @@ object EventQueries {
     // so one user's intervals OVERLAP: a probe matches several at once, the
     // one-to-many range form that as-of (single latest state) cannot express
     "events_interval_join" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = readTable(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val probes = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -315,7 +317,7 @@ object EventQueries {
     // existing double), never an average, so the fill is bitwise
     "impute_median" -> ((s, dir) =>
       graft.ops.Impute.groupMedianFill(
-        s.read.parquet(s"$dir/events.parquet"),
+        readTable(s, dir, "events"),
         group = "event_type", id = "event_id", value = "value",
         missing = expr(s"event_id % $ImputeMissMod = 0"))),
 
@@ -324,7 +326,7 @@ object EventQueries {
     // OPTIMIZE ZORDER case, measured
     "zorder_layout" -> ((s, dir) =>
       graft.ops.Layout.zorderReport(
-        s.read.parquet(s"$dir/events.parquet")
+        readTable(s, dir, "events")
           .withColumn("day",
             expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")),
         id = "event_id", x = "user_id", y = "day",

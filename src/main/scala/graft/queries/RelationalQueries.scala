@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 /** Relational coverage over the TPC-H-ish tables: multi-way joins with
   * broadcast dims, anti/semi joins, group-top-k. Money sums are computed in
   * exact integer cents so DuckDB parity is bitwise. */
@@ -53,7 +55,7 @@ object RelationalQueries {
     // form) over synthesized per-doc paths — exact string ops, bitwise
     "path_norm" -> ((s, dir) => {
       import graft.sources.{Paths => P}
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = readTable(s, dir, "documents")
       val raw = concat(lit("C:\\corpus\\"), col("source"), lit("\\d"),
         lpad(col("doc_id").cast("string"), 6, "0"), lit(".tok"))
       docs.select(col("doc_id"),

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 import graft.ops.{Sampling, Sketches, TextAnalysis}
 import graft.sources.Seqs
 
@@ -87,7 +89,7 @@ object SketchQueries {
     // Bloom-filter semi-join pruning report (single row)
     "bloom_prune" -> ((s, dir) =>
       Sketches.bloomPruneReport(
-        s.read.parquet(s"$dir/documents.parquet"),
+        readTable(s, dir, "documents"),
         col("doc_id"), col("lang") === BloomLang,
         BloomBits, BloomHashes)),
 

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Partitioning.readTable
+
 /** The canonical source table of pre-tokenized training sequences:
   *
   * {{{ (doc_id: string, tokens: array<int32>, n_tok: int32, source: string) }}}
@@ -150,7 +152,7 @@ object Seqs {
     //     left the job waiting on its slowest partition, and a
     //     single-task explode+sort fan-out added a serial Amdahl term
     //     that capped 8->32-core efficiency at ~0.55).
-    spark.read.parquet(s"$dir/documents.parquet")
+    readTable(spark, dir, "documents")
       .repartition(parts, col("doc_id"))
       .select(col("doc_id"), col("n_chars"), col("source"),
         explode(expr(s"sequence(0, $factor - 1)")).as("rep"))

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.core.Partitioning.readTable
+
 /** Dev probe: head-to-head timing of the two hashed-linear-scorer forms
   * (relational explode+broadcast-join+agg vs the shuffle-free native
   * kernel) in one JVM — battery entries are too noisy for a ~1 s query.
@@ -20,7 +22,7 @@ object LinearProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.ops.LinearModel
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = readTable(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val w = LinearModel.synthWeights(spark, 4096)
     def time(name: String, f: () => Unit): Unit = {

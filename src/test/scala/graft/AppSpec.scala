@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.features.{FeaturesHl, Pipeline}
 import graft.sink.KeyedSink
@@ -25,11 +25,12 @@ class AppSpec extends AnyFunSuite {
     // the Crawler.cpp:934-998 modtime-diff re-run, end to end: v2 changes
     // 1-in-10 docs; the incremental pass must (a) select exactly those,
     // (b) after upserting just their recomputed features, leave the sink
-    // bitwise-equal to a from-scratch v2 run
+    // bitwise-equal to a from-scratch v2 run; App's incremental run
+    // commits those rows as a delta snapshot
     import org.apache.spark.sql.functions._
     val out = Files.createTempDirectory("graft-app-incr").toString
     val v1 = Seqs.fromDocuments(spark, "/root/testdata/sf0.001")
-    KeyedSink.upsert(spark, out, Pipeline.featuresLl(v1), "doc_id")
+    App.run(spark, v1, out, "low", incremental = false)
     val changed = expr("CAST(substring(doc_id, 2) AS INT) % 10 = 0")
     val v2 = v1
       .withColumn("tokens",
@@ -41,12 +42,18 @@ class AppSpec extends AnyFunSuite {
     val pending = KeyedSink.pending(spark, out, v2, "doc_id", "n_tok")
     assert(pending.count() == nChanged,
       "version diff must select exactly the changed docs")
-    KeyedSink.upsert(spark, out, Pipeline.featuresLl(pending), "doc_id")
+    val stats = App.run(spark, v2, out, "low", incremental = true).get
+    assert(stats.upsertedRows == nChanged)
+    assert(Files.readString(Paths.get(out, s"snap-${stats.snapshot}.json"))
+      .contains("\"kind\": \"delta\""), "the incremental commit must be a delta")
     val incremental = KeyedSink.read(spark, out).get
       .collect().map(_.toSeq).toSet
     val scratch = Pipeline.featuresLl(v2).collect().map(_.toSeq).toSet
     assert(incremental == scratch,
       "incremental sink state must equal the from-scratch v2 run")
+    assert(stats.totalRows == scratch.size)
+    assert(App.run(spark, v2, out, "low", incremental = true).isEmpty,
+      "a re-run after the delta finds nothing pending")
   }
 
   test("csv export/import round-trip (ModelTester CSV export analog)") {

@@ -151,6 +151,19 @@ class FeatureEngSpec extends AnyFunSuite {
     assert(got == exp)
   }
 
+  test("a KN scoring plan analyses and runs again after 9 more scorings") {
+    // the model reaches the kernel by reference, so a new analysis of the
+    // first plan (view re-resolution, a retry) finds it however many
+    // scorings ran since
+    val first = LanguageModel.scoreBigramKn(toyCorpus)
+    val want = first.collect().toSet
+    for (_ <- 1 to 9) LanguageModel.scoreBigramKn(toyCorpus).collect()
+    val again = spark.sessionState.executePlan(first.queryExecution.logical)
+    again.assertAnalyzed()
+    assert(again.executedPlan.executeCollectPublic().toSet == want)
+    assert(want.size == 3)
+  }
+
   test("DSIR importance weights match in-memory brute force") {
     graft.functions.expressions.register(spark)
     val docs = Map(

@@ -538,4 +538,38 @@ class KeyedSinkSpec extends AnyFunSuite {
     Files.delete(Paths.get(path, "snap-1.schema.json"))
     assert(jobsDuring(KeyedSink.read(spark, path, k)).nonEmpty)
   }
+
+  test("source reads plan with one footer's schema, equal to inference; building fromDocuments starts no job") {
+    import graft.core.Partitioning.{footerSchema, readTable}
+    val sf = "/root/testdata/sf0.001"
+    for (t <- Seq("documents", "embeddings", "events")) {
+      val inferred = spark.read.parquet(s"$sf/$t.parquet").schema
+      assert(footerSchema(spark, s"$sf/$t.parquet").contains(inferred), t)
+      assert(readTable(spark, sf, t).schema == inferred, t)
+      assert(readTable(spark, sf, t).schema.fieldNames.toSeq == inferred.fieldNames.toSeq, t)
+    }
+    // ARRAY<DOUBLE> embeddings; a directory of several files whose schemas
+    // differ (inference reads the first data file only)
+    val dir = freshPath()
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("embedding", col("embedding").cast("array<double>"))
+    emb.repartition(3).write.parquet(s"$dir/embeddings.parquet")
+    emb.limit(5).withColumn("w", lit(1L)).write.mode("append")
+      .parquet(s"$dir/embeddings.parquet")
+    emb.limit(5).drop("label").write.mode("append")
+      .parquet(s"$dir/embeddings.parquet")
+    val inferred = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    assert(inferred("embedding").dataType.sql == "ARRAY<DOUBLE>")
+    assert(readTable(spark, dir, "embeddings").schema == inferred)
+    assert(readTable(spark, dir, "embeddings").count() == emb.count() + 10)
+    // a partitioned directory: inference adds the partition column, so the
+    // read falls back to it
+    emb.limit(20).write.partitionBy("label").parquet(s"$dir/parted.parquet")
+    assert(footerSchema(spark, s"$dir/parted.parquet").isEmpty)
+    assert(readTable(spark, dir, "parted").schema ==
+      spark.read.parquet(s"$dir/parted.parquet").schema)
+    val jobs = jobsDuring(graft.sources.Seqs.fromDocuments(spark, sf))
+    assert(jobs.isEmpty, s"building fromDocuments started ${jobs.size} jobs")
+    assert(jobsDuring(spark.read.parquet(s"$sf/documents.parquet")).nonEmpty)
+  }
 }

@@ -88,6 +88,23 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"\n${plans.mkString("\n")}")
     }
 
+  // the trained models reach their kernels by reference, so no plan of
+  // these queries, model-building executions included, prints a model:
+  // no plan line holds a literal array (a model is thousands of numbers on
+  // one line), and the plan texts stay small. The ivfpq_recall bound is
+  // its plan's structure, ~250 lines over two query trees.
+  for ((q, maxChars) <- Seq(("nb_classify", 8 << 10), ("ivfpq_recall", 64 << 10)))
+    test(s"$q: no executed plan prints a model") {
+      val plans = SparkTestSession.executionsDuring(
+        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect())
+        .map(_.toString)
+      assert(plans.nonEmpty)
+      for (p <- plans) {
+        assert(p.length < maxChars, s"${p.length} chars")
+        assert(p.linesIterator.map(_.length).max < 1024, p.take(4096))
+      }
+    }
+
   test("in-row onset queries keep the frame-row row set") {
     // d000001: a normal doc; null doc_id: null tokens; d000003: no tokens
     val dir = documents(Seq((Some(1L), 100L, "a"), (None, 100L, "b"),

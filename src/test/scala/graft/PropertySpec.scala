@@ -200,7 +200,7 @@ class PropertySpec extends AnyFunSuite {
   test("viterbi segmentation kernel == scalar DP reference (random models)") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
     val rnd = new Random(1234)
     for (trial <- 1 to 60) {
       val alpha = 2 + rnd.nextInt(5) // small alphabet forces bigram reuse
@@ -241,12 +241,11 @@ class PropertySpec extends AnyFunSuite {
         (a + 2048L) * 4096L + (b + 2048L) }.sorted
       val biByCode = bi.map { case ((a, b), v) =>
         ((a + 2048L) * 4096L + (b + 2048L)) -> v }
+      val model = SparkTestSession.spark.sparkContext.broadcast(
+        graft.functions.expressions.SegModel(ut.map(_ + 2048L),
+          ut.map(t => uni(t)), bp, bp.map(biByCode)))
       val out = graft.functions.expressions.ViterbiSeg(
-        Literal.create(ts.toSeq, ArrayType(IntegerType)),
-        Literal.create(ut.map(_ + 2048L).toSeq, ArrayType(LongType)),
-        Literal.create(ut.map(t => uni(t)).toSeq, ArrayType(LongType)),
-        Literal.create(bp.toSeq, ArrayType(LongType)),
-        Literal.create(bp.map(biByCode).toSeq, ArrayType(LongType)))
+        Literal.create(ts.toSeq, ArrayType(IntegerType)), model)
         .eval(null).asInstanceOf[ArrayData].toLongArray()
       assert(out(0) == pieces.length.toLong, s"trial $trial n_pieces")
       assert(out(1) == refNBi, s"trial $trial n_bi")
@@ -276,6 +275,57 @@ class PropertySpec extends AnyFunSuite {
       }
       assert(dot == sd) // identical fold order -> bitwise
       assert(l2 == sl)
+    }
+  }
+
+  test("micro-nat quantizer == BigDecimal HALF_UP, bitwise") {
+    import graft.functions.models.microNat
+    def ref(x: Double): Long = java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+    val rnd = new Random(5150)
+    val signed = (x: Double) => if (rnd.nextBoolean()) -x else x
+    // every magnitude: uniform mantissas scaled through 10^-9 .. 10^19,
+    // raw bit patterns and log-ratio micro-nats like the model tables'
+    val scaled = Seq.fill(100000)(
+      signed(rnd.nextDouble() * math.pow(10, rnd.nextInt(29) - 9)))
+    val bits = Seq.fill(20000)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+      .filterNot(x => x.isNaN || x.isInfinity)
+    val nats = Seq.fill(20000)(
+      math.log((1 + rnd.nextInt(1 << 20)).toDouble / (1 + rnd.nextInt(1 << 20))) * 1000000)
+    // exact .5 ties at every scale below 2^52, and their neighbours
+    val ties = Seq.fill(20000)(
+      signed((rnd.nextLong() >>> (12 + rnd.nextInt(52))).toDouble + 0.5))
+    val near = ties.flatMap(t => Seq(Math.nextUp(t), Math.nextDown(t),
+      Math.nextUp(Math.nextUp(t)), Math.nextDown(Math.nextDown(t))))
+    val edges = Seq(0.0, -0.0, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
+      0.49999999999999994, -0.49999999999999994, Double.MinPositiveValue,
+      4503599627370495.5, -4503599627370495.5, 4503599627370496.0,
+      9007199254740993.0, Long.MaxValue.toDouble / 2)
+    for (x <- scaled ++ bits ++ nats ++ ties ++ near ++ edges)
+      assert(microNat(x) == ref(x), s"x = $x (${java.lang.Double.doubleToRawLongBits(x)})")
+  }
+
+  test("packed n-grams reject tokens outside the 12-bit domain") {
+    import org.apache.spark.sql.functions.expr
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val rnd = new Random(2047)
+    val arrays = Seq.fill(Trials)(
+      Seq.fill(rnd.nextInt(12))(rnd.nextInt(4096) - 2048)) :+ Seq(-2048, 2047, 0)
+    val df = arrays.toDF("tokens")
+    for (k <- 1 to 3) {
+      // in-domain codes: base-4096 digits of the shifted tokens
+      val got = df.select(expr(s"graft_pack_ngrams(tokens, $k)")).as[Seq[Long]].collect()
+      val want = arrays.map(_.map(_ + 2048L).sliding(k).filter(_.length == k)
+        .map(_.foldLeft(0L)((v, g) => v * 4096 + g)).toSeq)
+      assert(got.toSeq == want, s"k = $k")
+      // (t1, 2048) would pack to the code of (t1 + 1, -2048)
+      for (bad <- Seq(Seq(5, 2048), Seq(-2049, 5), Seq(1, 2, 1 << 20))) {
+        val e = intercept[Exception](Seq(bad).toDF("tokens")
+          .select(expr(s"graft_pack_ngrams(tokens, $k)")).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.getMessage.contains("token out of 12-bit domain")), s"k = $k $bad")
+      }
     }
   }
 }
